@@ -22,8 +22,12 @@ Stage map (reference citations):
 - ``shape_json_output``  — script/helper.py:99-186 (subTypes map,
   distribution price projection, renames/drops, changelog metadata,
   flat->nested struct schema)
+- ``build_slice``        — stages 1-3 + modify_data for one slice
 - ``consume_batch``      — the 4-slice country/distribution loop with
-  UNION ALL accumulation (script/main.py:300-368)
+  UNION ALL accumulation as one lazy plan (script/main.py:300-368)
+- ``run_job``            — the nightly job run end to end: staged prep,
+  concurrent slices with their CSV/JSON sinks, the parquet sink
+  (script/main.py:300-416)
 
 Semantics preserved on purpose (SURVEY.md §4): the visibility join is
 multiplicity-preserving INNER (not semi); stale-id elimination is
@@ -34,7 +38,7 @@ dropped (inner as-of join); ``fraudLevelId <= 0`` drops null-fraud rows.
 
 from __future__ import annotations
 
-import itertools
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import date, timedelta
 
@@ -45,6 +49,7 @@ from ..functions.columns import prefix_select, strip_prefix
 from ..functions.maps import keyed_map_column
 from ..functions.nesting import nest_columns
 from ..functions.whenchain import when_chain
+from ..operators import partitioning
 from ..operators.asof import asof_join
 from ..operators.dedup import top_n_per_group
 from ..operators.joins import (
@@ -54,6 +59,7 @@ from ..operators.joins import (
     summarize_for_join,
 )
 from ..operators.setops import union_slices
+from ..sinks import writers
 
 #: script/config.json:141-147 — the payload-column namespace.
 VALID_PREFIXES = ("classified_", "cleaned_", "cleanup", "extracted_", "grenzwert_")
@@ -71,6 +77,21 @@ GEO_DROP_COLUMNS = (
 )
 
 _CORE = ("id", "partitionChangeDate", "changeDate", "globalObjectKey", "operation")
+
+#: The job's eight input tables, in :func:`consume_batch`'s argument order.
+INPUT_TABLES = (
+    "changelog",
+    "texts",
+    "visibility",
+    "fraud",
+    "contacts",
+    "visits",
+    "bundeslaender",
+    "stadtlandkreise",
+)
+
+#: Catalog name of the bucketed texts staging table.
+TEXTS_TABLE = "consume_batch_texts"
 
 
 @dataclass(frozen=True)
@@ -481,50 +502,26 @@ def shape_json_output(
     return nest_columns(out, sep="_")
 
 
-_STAGING_SEQ = itertools.count()
-_MANAGED_DIRS: list[str] = []
-_ATEXIT_REGISTERED = False
-
-
-def _cleanup_managed_staging() -> None:
-    """Remove every managed stage-0 dir this process still holds —
-    runs at interpreter exit and at the start of each new managed
-    call."""
-    import shutil
-
-    while _MANAGED_DIRS:
-        shutil.rmtree(_MANAGED_DIRS.pop(), ignore_errors=True)
-
-
-def _managed_staging_dir() -> str:
-    """A fresh per-call stage-0 staging path under the system tmp dir:
-    pid + monotone counter, so concurrent frames from repeated calls in
-    one process never overwrite each other's still-referenced files.
-
-    Lifecycle (r9 verdict ask #7 / ADVICE — the previous version never
-    deleted these, so a long-lived process leaked one full stage-0
-    parquet copy per default-mode call): the PREVIOUS call's managed
-    dir is removed at the start of the next call — by then the prior
-    returned DataFrame has been consumed in every sane single-frame
-    flow — and an atexit hook sweeps whatever remains, so a process
-    holds at most ONE managed stage-0 copy at a time. A caller that
-    needs several frames alive simultaneously passes ``stage0_staging``
-    explicitly and owns the lifecycle — the registered e2e query and
-    the CLI both do."""
-    global _ATEXIT_REGISTERED
-    import atexit
-    import os
-    import tempfile
-
-    if not _ATEXIT_REGISTERED:
-        atexit.register(_cleanup_managed_staging)
-        _ATEXIT_REGISTERED = True
-    _cleanup_managed_staging()
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_stage0_{os.getpid()}_{next(_STAGING_SEQ)}"
+def build_slice(
+    merged: DataFrame,
+    tables: dict[str, DataFrame],
+    spec: SliceSpec,
+    dates: JobDates,
+    dims: dict[str, DataFrame],
+) -> DataFrame:
+    """Stages 1-3 + ``modify_data`` for one slice of the
+    country/distribution matrix, built on the shared stage-0
+    ``merged`` and the shared enrichment ``dims``."""
+    first = basedata_first(merged, tables["texts"], spec.geoid, spec.distribution_type)
+    base = basedata_enrich(
+        first, tables["visibility"], tables["fraud"], tables["contacts"],
+        tables["visits"], dates, dims=dims,
     )
-    _MANAGED_DIRS.append(path)
-    return path
+    final = basedata_final(base, first, dates, spec.price_amount_column)
+    return modify_data(
+        final, spec.geoid, dates.partition_month,
+        tables["bundeslaender"], tables["stadtlandkreise"],
+    )
 
 
 def consume_batch(
@@ -537,174 +534,146 @@ def consume_batch(
     bundeslaender: DataFrame,
     stadtlandkreise: DataFrame,
     dates: JobDates,
-    *,
-    slices: tuple[SliceSpec, ...] = DEFAULT_SLICES,
-    materialize: bool = False,
-    stage0_mode: str = "staged",
-    stage0_storage=None,
-    stage0_staging: str | None = None,
 ) -> DataFrame:
-    """The full job (script/main.py:300-368): stage 0 once, stages 1-3 +
-    modify_data per slice, UNION ALL accumulation. Stage-0 is shared by
-    every slice (reference C1 cache policy); WHERE it lives is the
-    ``stage0_mode`` knob.
+    """The full job as one lazy plan (script/main.py:300-368): stage 0,
+    stages 1-3 + modify_data per slice, UNION ALL accumulation.
 
-    ``stage0_mode="staged"`` (the DEFAULT since r9 — the r8 review's
-    one weak item was defaulting to the mode that loses at every
-    measured scale >= sf0.1): the merged change-log is written ONCE to
-    a snappy-parquet staging table, then every slice chain scans the
-    staged files. A parquet staging table has no cache-residency
-    limit, gets columnar scan + pruning on the read side, and its
-    write cost is one pass over stage-0 (which ``materialize=True``
-    pays anyway); the 64x probe measured 86.5s staged vs 230.8s cached
-    (the cached path's superlinear knee is cache pressure, and the
-    round-6 StorageLevel A/B proved no storage level fixes it), and
-    even at sf0.1 staged wins (6.9s vs 11.8s driver bench). The
-    staging dir is managed (a fresh per-call tmp dir) unless
-    ``stage0_staging`` names a path; callers that sink many runs
-    should pass an explicit path they own and reuse.
-
-    ``stage0_mode="cached"`` keeps stage-0 in the block-manager cache —
-    the documented SMALL-INPUT variant: when the merged change-log is
-    tiny (unit-test fixtures, sub-sf0.01 slices), the parquet
-    write+read round-trip costs more than it saves, and cached wins.
-    ``materialize=True`` runs one count() job to fill the cache before
-    the slice plans are consumed: a single downstream action over the
-    union would otherwise race all four slices into the cold cache and
-    recompute stage-0 per slice subtree. ``stage0_storage`` overrides
-    the cache's StorageLevel (cached mode only) — the tunable for
-    memory-bound clusters (round-6 A/B: the default deserialized
-    columnar cache was fastest at 64x; MEMORY_AND_DISK paid ~5%).
-
-    ``stage0_staging`` (r6 review ask #1) names an explicit staging
-    path (implies staged mode; the write IS the materialization)."""
-    if stage0_mode not in ("staged", "cached"):
-        raise ValueError(f"stage0_mode must be 'staged' or 'cached', got {stage0_mode!r}")
-    if stage0_staging is not None and stage0_mode == "cached":
-        # mirror the stage0_storage mutual-exclusion check (r9 ADVICE):
-        # an explicit cached request must not be silently overridden by
-        # the staging path's staged-mode implication
-        raise ValueError(
-            "stage0_staging implies staged mode and cannot be combined "
-            "with stage0_mode='cached'"
+    Nothing is staged, cached or written, so this is the reference plan
+    that tests and plan audits compare against; :func:`run_job` runs
+    the same per-slice chains on staged prep. The slice-independent
+    enrichment inputs are built once and shared by all four slice
+    subtrees, so under the single downstream action each summary
+    becomes one exchange via ReuseExchange instead of four (§2.4)."""
+    tables = dict(
+        zip(
+            INPUT_TABLES,
+            (changelog, texts, visibility, fraud_events, contacts, visits,
+             bundeslaender, stadtlandkreise),
         )
+    )
     merged = merge_delete(filter_changelog(changelog), dates.first_day_past)
-    if stage0_staging is not None or stage0_mode == "staged":
-        if stage0_storage is not None:
-            raise ValueError("stage0 staging and stage0_storage are mutually exclusive")
-        staging = stage0_staging if stage0_staging is not None else _managed_staging_dir()
-        merged.write.mode("overwrite").parquet(staging)
-        merged = changelog.sparkSession.read.parquet(staging)
-    else:
-        merged = merged.persist(stage0_storage) if stage0_storage is not None else merged.cache()
-        if materialize:
-            merged.count()
-    # slice-independent enrichment inputs built ONCE and shared by all
-    # four slice subtrees: under the single downstream action the four
-    # identical summary subtrees become one exchange each via Spark's
-    # ReuseExchange instead of four (§2.4)
     dims = prepare_enrich_dims(visibility, fraud_events, contacts, visits, dates)
-    parts = []
-    for spec in slices:
-        first = basedata_first(merged, texts, spec.geoid, spec.distribution_type)
-        base = basedata_enrich(
-            first, visibility, fraud_events, contacts, visits, dates, dims=dims
+    return union_slices(
+        [build_slice(merged, tables, spec, dates, dims) for spec in DEFAULT_SLICES], "ALL"
+    )
+
+
+def prepare_job(
+    tables: dict[str, DataFrame], dates: JobDates, out_root: str
+) -> tuple[DataFrame, dict[str, DataFrame], dict[str, DataFrame]]:
+    """The job's three prep jobs, run concurrently from one driver pool
+    because none reads another's output (§2.6 "overlap independent
+    jobs"). Returns the staged stage-0 frame, ``tables`` with the staged
+    texts, and the checkpointed enrichment dims.
+
+    - Stage 0 is written once to ``<out_root>/_stage0_staging`` and
+      every slice scans the files. A parquet staging table has no
+      cache-residency limit and gets columnar scans with pruning; the
+      block-manager cache it replaced lost at every measured scale
+      >= sf0.1 (6.9 s vs 11.8 s at sf0.1, 86.5 s vs 230.8 s at 64x,
+      SCALE.md).
+    - The texts table is staged bucketed and sorted by ``id``
+      (:func:`operators.partitioning.stage_bucketed_by_key`). At sf0.1
+      the planner broadcasts the small texts side anyway; past the
+      broadcast threshold each slice's sort-merge join would otherwise
+      shuffle and sort the whole texts projection once per slice
+      (tests/test_plans.py pins the exchange-free texts side).
+    - The four :func:`prepare_enrich_dims` frames are checkpointed
+      before the slice pool starts: the slice chains are separate
+      concurrent Spark jobs, so without this each would re-run the
+      visibility filter, the fraud argmax and both counter group-bys,
+      racing each other into a cold cache (§2.4). The summaries are
+      key-count-sized; ``active`` is the filtered visibility
+      projection, never change-log-sized.
+    """
+    spark = tables["changelog"].sparkSession
+    merged = merge_delete(filter_changelog(tables["changelog"]), dates.first_day_past)
+    staging = f"{out_root}/_stage0_staging"
+
+    def stage0() -> DataFrame:
+        merged.write.mode("overwrite").parquet(staging)
+        return spark.read.parquet(staging)
+
+    raw_dims = prepare_enrich_dims(
+        tables["visibility"], tables["fraud"], tables["contacts"], tables["visits"], dates
+    )
+    with ThreadPoolExecutor(max_workers=2 + len(raw_dims)) as pool:
+        f_stage0 = pool.submit(stage0)
+        f_texts = pool.submit(
+            partitioning.stage_bucketed_by_key,
+            tables["texts"], "id", f"{out_root}/_texts_staging", TEXTS_TABLE,
         )
-        final = basedata_final(base, first, dates, spec.price_amount_column)
-        parts.append(
-            modify_data(final, spec.geoid, dates.partition_month, bundeslaender, stadtlandkreise)
+        f_dims = {k: pool.submit(v.localCheckpoint, eager=True) for k, v in raw_dims.items()}
+        return (
+            f_stage0.result(),
+            {**tables, "texts": f_texts.result()},
+            {k: f.result() for k, f in f_dims.items()},
         )
-    return union_slices(parts, "ALL")
 
 
 def run_slices_concurrent(
     tables: dict[str, DataFrame],
     merged: DataFrame,
-    dates: "JobDates",
+    dates: JobDates,
     out_root: str,
+    dims: dict[str, DataFrame],
     *,
-    slices=DEFAULT_SLICES,
     json_clock: str | None = None,
-    count_rows: bool = False,
-    dims: dict[str, DataFrame] | None = None,
-) -> tuple[list[DataFrame], dict[str, int] | None]:
-    """The shared slice orchestration both the CLI job driver and the
-    e2e workload run (previously two hand-copied loops — r3 review):
-    build stages 1-3 + modify_data for each slice FROM the already
-    cached stage-0 ``merged``, sink each slice to single-file gzip CSV
-    + gzip JSON, all four chains CONCURRENTLY from a driver thread pool
-    (Spark schedules jobs from multiple threads onto one session;
-    measured ~1.9x over the reference's serial loop at sf0.1).
+) -> tuple[list[DataFrame], dict[str, int]]:
+    """Build each slice with :func:`build_slice` on the prepared
+    ``merged`` and ``dims``, count it, and sink it to single-file gzip
+    CSV + gzip JSON. The four chains run concurrently from a driver
+    thread pool: Spark schedules jobs from several threads onto one
+    session, so the single-task gzip writes and window chains overlap
+    instead of running in the reference's serial loop (~1.9x at sf0.1).
 
-    ``dims`` (optional) supplies ALREADY-MATERIALIZED slice-independent
-    enrichment inputs (the :func:`prepare_enrich_dims` frames, each
-    eagerly checkpointed) — callers that can overlap that
-    materialization with other prep jobs (§2.6; the e2e workload
-    overlaps it with the stage-0 staging write) pass them in; the
-    default path builds and checkpoints them here. Either way the
-    caller owns the blocks' lifecycle — see the Returns note.
+    Returns the cached slice frames, which the caller unions, sinks and
+    unpersists, and the row count of each slice by its tag."""
 
-    Returns the cached slice frames (callers union + parquet-sink them
-    and must unpersist) and, with ``count_rows``, per-slice row counts.
-    Block-release obligation (r13 ADVICE): the dim checkpoints are
-    RDD-level blocks ``DataFrame.unpersist`` cannot release — after the
-    returned slices are unpersisted, callers in long-lived drivers
-    should release them via the ``persistent_rdd_ids`` /
-    ``release_new_persistent_rdds`` diff (streaming/sinks.py pattern);
-    the bench's between-pass persistent-block drop is that hygiene.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..sinks.writers import write_csv_gzip, write_json_gzip
-
-    # the slice-independent enrichment inputs, computed ONCE and
-    # materialized (eager localCheckpoint) BEFORE the pool starts: the
-    # four slice chains are separate concurrent Spark jobs, so without
-    # this each chain re-runs the visibility filter, the fraud argmax
-    # and both counter group-bys — 4x the slice-independent shuffles —
-    # and would race each other into a cold cache (§2.4). The fraud/
-    # contacts/visits summaries are key-count-sized (one row per
-    # classifiedId / globalObjectKey); `active` is the raw filtered
-    # visibility projection (multiplicity-preserving BY DESIGN, so it
-    # can repeat a classifiedId) — filtered-visibility-sized, still
-    # never change-log-sized. Their blocks are process-persistent until
-    # the caller's block hygiene runs (bench drops persistent blocks
-    # between passes); they must NOT be released while the returned
-    # cached slices could still recompute (checkpoint-truncated
-    # lineage).
-    if dims is None:
-        dims = {
-            k: v.localCheckpoint(eager=True)
-            for k, v in prepare_enrich_dims(
-                tables["visibility"], tables["fraud"], tables["contacts"],
-                tables["visits"], dates,
-            ).items()
-        }
-
-    def build_and_sink(spec):
-        first = basedata_first(merged, tables["texts"], spec.geoid, spec.distribution_type)
-        base = basedata_enrich(
-            first, tables["visibility"], tables["fraud"], tables["contacts"],
-            tables["visits"], dates, dims=dims,
-        )
-        final = basedata_final(base, first, dates, spec.price_amount_column)
-        sliced = modify_data(
-            final, spec.geoid, dates.partition_month,
-            tables["bundeslaender"], tables["stadtlandkreise"],
-        ).cache()
+    def build_and_sink(spec: SliceSpec) -> tuple[str, int, DataFrame]:
+        sliced = build_slice(merged, tables, spec, dates, dims).cache()
         tag = f"{spec.geoid}_{spec.distribution_type}"
-        n = sliced.count() if count_rows else None
-        write_csv_gzip(sliced, f"{out_root}/csv/{tag}", files=1)
-        shaped = (
-            shape_json_output(sliced, spec.distribution_type, clock=json_clock)
-            if json_clock is not None
-            else shape_json_output(sliced, spec.distribution_type)
+        n = sliced.count()
+        writers.write_csv_gzip(sliced, f"{out_root}/csv/{tag}", files=1)
+        writers.write_json_gzip(
+            shape_json_output(sliced, spec.distribution_type, clock=json_clock),
+            f"{out_root}/json/{tag}",
+            files=1,
         )
-        write_json_gzip(shaped, f"{out_root}/json/{tag}", files=1)
         return tag, n, sliced
 
-    with ThreadPoolExecutor(max_workers=len(slices)) as pool:
-        results = list(pool.map(build_and_sink, slices))
-    parts = [sliced for _, _, sliced in results]
-    counts = {tag: n for tag, n, _ in results} if count_rows else None
-    return parts, counts
+    with ThreadPoolExecutor(max_workers=len(DEFAULT_SLICES)) as pool:
+        results = list(pool.map(build_and_sink, DEFAULT_SLICES))
+    return [sliced for _, _, sliced in results], {tag: n for tag, n, _ in results}
+
+
+def run_job(
+    tables: dict[str, DataFrame],
+    dates: JobDates,
+    out_root: str,
+    *,
+    json_clock: str | None = None,
+) -> dict[str, int]:
+    """The nightly job end to end (script/main.py:300-416) over the
+    :data:`INPUT_TABLES` in ``tables``: the prep of
+    :func:`prepare_job`, the four slice chains with their gzip CSV and
+    JSON sinks, then the union of the slices overwritten into the
+    month-partitioned parquet sink under ``<out_root>/parquet``.
+    ``json_clock`` pins the JSON changelog timestamp. Returns the row
+    count of each slice by its tag.
+
+    The dim checkpoints are RDD-level blocks that
+    ``DataFrame.unpersist`` cannot release; a long-lived driver that
+    runs many jobs should release them through the
+    ``persistent_rdd_ids`` / ``release_new_persistent_rdds`` diff
+    (the streaming/sinks.py pattern)."""
+    merged, tables, dims = prepare_job(tables, dates, out_root)
+    parts, counts = run_slices_concurrent(
+        tables, merged, dates, out_root, dims, json_clock=json_clock
+    )
+    writers.overwrite_partitions(
+        union_slices(parts, "ALL"), f"{out_root}/parquet", ["partitionMonth"]
+    )
+    for p in parts:
+        p.unpersist()
+    return counts

@@ -86,10 +86,13 @@ _TESTDATA_TABLES = (
 def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Load one driver-provided synthetic table (TESTDATA.md).
 
-    ``events.ts`` is written as parquet INT64 TIMESTAMP(NANOS), which
-    Spark's vectorized reader rejects outright — we read it via the
-    nanos-as-long escape hatch and rebuild a (microsecond) timestamp.
-    The testdata's nanos are microsecond-clean, so this is lossless.
+    ``events.ts`` is stored as parquet INT64 TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) in every provided scale (sf0.001, sf0.01,
+    sf0.1), so Spark reads it as TIMESTAMP_NTZ and
+    :func:`normalize_event_ts` takes its NTZ branch, casting it to a
+    session-local TIMESTAMP. Events go through
+    :func:`load_nanos_events` anyway, so a TIMESTAMP(NANOS) file, which
+    Spark's vectorized reader rejects outright, would still load.
     """
     if table not in _TESTDATA_TABLES:
         raise ValueError(f"unknown testdata table {table!r}; expected one of {_TESTDATA_TABLES}")

@@ -2,23 +2,21 @@
 
 ``pipelines/consume_batch.py`` is pytest-golden-tested on hand-built
 fixtures, and ``pipeline_market_analytics`` oracle-checks an analogous
-chain over the star schema — but until now nothing hash-verified or
-benchmarked the FAITHFUL pipeline end to end: 4 slices, the cached
-stage-0 merge, modify_data, and all three sinks (reference
-``script/main.py:300-416``).
+chain over the star schema; this module hash-verifies and benchmarks
+the FAITHFUL pipeline end to end: 4 slices, the staged stage-0 merge,
+modify_data, and all three sinks (reference ``script/main.py:300-416``).
 
-This module closes that: ``derive_consume_inputs`` builds the eight
-reference-shaped input tables deterministically from the ``events``
-testdata table (pure integer/floor arithmetic — every derived value is
-engine-exact), and ``pipeline_consume_batch_e2e`` runs the real job:
-stage-0 merge once + cache, stages 1-3 + modify_data per slice, gzip
-CSV + gzip JSON sinks per slice, dynamic-partition-overwrite parquet
-for the union, then returns the parquet read-back. The oracle replays
-the derivation AND the full pipeline in DuckDB, so the driver's value
-hash covers the whole job including the storage roundtrip.
+``derive_consume_inputs`` builds the eight reference-shaped input
+tables deterministically from the ``events`` testdata table (pure
+integer/floor arithmetic — every derived value is engine-exact), and
+``pipeline_consume_batch_e2e`` runs the job through
+``pipelines.consume_batch.run_job``, the path the CLI runs, then
+returns the parquet sink's read-back. The oracle replays the
+derivation AND the full pipeline in DuckDB, so the driver's value hash
+covers the whole job including the storage roundtrip.
 
 Scale notes: identical to the pipeline module's — ONE scan+shuffle for
-the stage-0 merge shared by all four slices via ``.cache()``; the
+the stage-0 merge, staged once and shared by all four slices; the
 slice loops multiply plan size, not shuffle count; both geo dims
 broadcast. The sinks are ``files=1`` gzip per the reference's contract
 (bounded repartition, never ``coalesce(1)``).
@@ -27,6 +25,7 @@ broadcast. The sinks are ``files=1`` gzip per the reference's contract
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from datetime import date
 
@@ -36,13 +35,8 @@ from pyspark.sql import functions as F
 from ..pipelines.consume_batch import (
     DEFAULT_SLICES,
     JobDates,
-    filter_changelog,
-    merge_delete,
-    modify_data,
-    run_slices_concurrent,
+    run_job,
 )
-from ..operators.setops import union_slices
-from ..sinks.writers import overwrite_partitions
 from ..sources.readers import read_testdata
 from .registry import register
 
@@ -500,152 +494,29 @@ def _e2e_oracle() -> str:
     return "WITH " + ",".join(parts) + "\n" + "\nUNION ALL\n".join(selects)
 
 
-def _stage_bucketed_texts(
-    spark: SparkSession, texts: DataFrame, path: str, name: str
-) -> DataFrame:
-    """Stage the texts enrichment table BUCKETED (and sorted) by the
-    join key, so every slice chain's texts join reuses the persisted
-    layout instead of exchanging the events-sized projection (§6 /
-    §2.4 "bucketed tables persist a partitioning across jobs"; the r13
-    verdict's top ask). At sf0.1 the planner broadcasts the tiny texts
-    side, so the local win is modest — the point is the scale shape:
-    past the broadcast threshold each slice's sort-merge join would
-    shuffle AND sort the full texts projection per slice (4x at 100
-    TB); against the bucketed table the texts side needs neither
-    (plans/r14/consume_texts_join_{before,after}.txt, captured with
-    the broadcast threshold off to show the at-scale shape).
-
-    Bucket count = the session-width scale knob; one file per bucket
-    (see ``operators.partitioning.stage_bucketed_by_key``), so the
-    read side skips the per-join sort too."""
-    from ..operators.partitioning import stage_bucketed_by_key
-
-    return stage_bucketed_by_key(texts, "id", path, name)
-
-
-def _consume_e2e(spark: SparkSession, sf_dir: str, *, stage0_mode: str) -> DataFrame:
-    """The full job once: derived inputs, stage-0 merge shared by all 4
-    slice chains (staged to parquet OR cached, per ``stage0_mode``),
-    stages 1-3 + modify_data per slice, gzip CSV + gzip JSON sinks per
-    slice (run CONCURRENTLY from a driver thread pool — Spark schedules
-    jobs from multiple threads onto one session, so the per-slice
-    single-task gzip writes and window chains overlap instead of
-    serializing; the reference main.py:300-368 runs the loop serially;
-    measured ~1.9x end-to-end at sf0.1/local[32]),
-    dynamic-partition-overwrite parquet for the union, result read back
-    FROM THE PARQUET SINK.
-
-    r14: the three PREP jobs — the stage-0 materialization, the
-    bucketed texts staging write, and the four enrichment-dim
-    checkpoints — are mutually independent, so they run concurrently
-    from the same driver pool (§2.6 "overlap independent jobs")
-    instead of serially; phase profile at sf0.1 measured them 3.2 s +
-    ~1 s + 1.5 s back-to-back, most of which now overlaps."""
-    import shutil
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..pipelines.consume_batch import prepare_enrich_dims
-
-    t = derive_consume_inputs(spark, sf_dir)
-    # ONE stable output tree per process and mode, replaced on each
-    # invocation: a fresh mkdtemp per call leaked a full three-sink
-    # output copy per bench iteration (r3 review finding)
-    out_root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_consume_e2e_{stage0_mode}"
-    )
-    shutil.rmtree(out_root, ignore_errors=True)
-    os.makedirs(out_root, exist_ok=True)
-
-    merged = merge_delete(filter_changelog(t["changelog"]), _DATES.first_day_past)
-
-    def _stage0() -> DataFrame:
-        if stage0_mode == "staged":
-            # stage-0 staged to parquet (consume_batch's default tier
-            # since r9): one write pass replaces the cache
-            # materialization, and the slice chains get a columnar scan
-            # with pruning instead of InMemoryTableScan rows
-            staging = f"{out_root}/stage0"
-            merged.write.mode("overwrite").parquet(staging)
-            return spark.read.parquet(staging)
-        # materialize the shared stage-0 merge FIRST (count() scans the
-        # InMemoryRelation, which caches whole rows) so the concurrent
-        # slice chains never race the cold cache
-        m = merged.cache()
-        m.count()
-        return m
-
-    def _texts() -> DataFrame:
-        return _stage_bucketed_texts(
-            spark,
-            t["texts"],
-            f"{out_root}/texts_bucketed",
-            f"spark_graft_e2e_texts_{stage0_mode}",
-        )
-
-    raw_dims = prepare_enrich_dims(
-        t["visibility"], t["fraud"], t["contacts"], t["visits"], _DATES
-    )
-    with ThreadPoolExecutor(max_workers=2 + len(raw_dims)) as pool:
-        f_stage0 = pool.submit(_stage0)
-        f_texts = pool.submit(_texts)
-        f_dims = {
-            k: pool.submit(lambda v=v: v.localCheckpoint(eager=True))
-            for k, v in raw_dims.items()
-        }
-        merged = f_stage0.result()
-        t = {**t, "texts": f_texts.result()}
-        dims = {k: f.result() for k, f in f_dims.items()}
-
-    parts, _ = run_slices_concurrent(
-        t, merged, _DATES, out_root, json_clock="2024-01-30 00:00:00", dims=dims
-    )
-
-    union = union_slices(parts, "ALL")
-    overwrite_partitions(union, f"{out_root}/parquet", ["partitionMonth"])
-    if stage0_mode == "cached":
-        merged.unpersist()
-    for p in parts:
-        p.unpersist()
-    return spark.read.parquet(f"{out_root}/parquet").select(*OUTPUT_COLS)
-
-
 @register(
     "pipeline_consume_batch_e2e",
     oracle=_e2e_oracle(),
     doc="The faithful consume-batch job END TO END under one value hash: "
-    "derived reference-shaped inputs, stage-0 merge STAGED to a "
-    "snappy-parquet table and shared by all 4 slices (the default mode "
-    "since r9 — the r8 verdict's one weak item was this flagship "
-    "defaulting to the cached mode its own measurements beat at every "
-    "scale >= sf0.1: staged 6.9s vs cached 11.8s at sf0.1, 86.5s vs "
-    "230.8s at 64x where the cache-pressure knee hits), stages 1-3 + "
-    "modify_data per slice, gzip CSV + gzip JSON sinks per slice, "
-    "dynamic-partition-overwrite parquet for the union, result read "
-    "back FROM THE PARQUET SINK. Oracle replays the derivation and "
-    "every stage in DuckDB (reference script/main.py:300-416).",
+    "derived reference-shaped inputs, then the CLI's run_job: stage-0 "
+    "merge staged to a snappy-parquet table shared by all 4 slices, "
+    "texts staged bucketed by id, enrichment dims checkpointed (the "
+    "three prep jobs overlapped), stages 1-3 + modify_data per slice, "
+    "gzip CSV + gzip JSON sinks per slice, dynamic-partition-overwrite "
+    "parquet for the union, result read back FROM THE PARQUET SINK. "
+    "Oracle replays the derivation and every stage in DuckDB "
+    "(reference script/main.py:300-416).",
     tags=("bench", "eager"),
 )
 def pipeline_consume_batch_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _consume_e2e(spark, sf_dir, stage0_mode="staged")
-
-
-@register(
-    "pipeline_consume_batch_e2e_cached",
-    # SAME oracle as the staged flagship: the stage-0 tier changes only
-    # WHERE stage-0 lives (block-manager cache vs a snappy-parquet
-    # staging table), never a row — pytest additionally enforces
-    # row-identical equivalence (test_consume_batch_staged_equals_cached)
-    oracle=_e2e_oracle(),
-    doc="The faithful consume-batch job end to end in CACHED stage-0 "
-    "mode — the documented SMALL-INPUT variant of the flagship "
-    "(roles swapped with the staged mode in r9 per the r8 verdict): "
-    "when the merged change-log is tiny, the parquet write+read "
-    "round-trip costs more than it saves and the block-manager cache "
-    "wins; at sf0.1 and above the staged default wins at every "
-    "measured scale. Same derivation, same 4 concurrent slice chains + "
-    "gzip CSV/JSON sinks, same dynamic-partition-overwrite parquet, "
-    "result read back from the parquet sink under the same value hash.",
-    tags=("bench", "eager"),
-)
-def pipeline_consume_batch_e2e_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _consume_e2e(spark, sf_dir, stage0_mode="cached")
+    # ONE stable output tree per process, replaced on each call: a fresh
+    # tmp dir per call would leak a full three-sink output copy per
+    # bench iteration
+    out_root = os.path.join(tempfile.gettempdir(), "spark_graft_consume_e2e")
+    shutil.rmtree(out_root, ignore_errors=True)
+    os.makedirs(out_root, exist_ok=True)
+    run_job(
+        derive_consume_inputs(spark, sf_dir), _DATES, out_root,
+        json_clock="2024-01-30 00:00:00",
+    )
+    return spark.read.parquet(f"{out_root}/parquet").select(*OUTPUT_COLS)

@@ -128,18 +128,13 @@ FORCE_RECHECK: dict[str, int] = {
     "dedup_ngram_jaccard": 14,
     "dedup_ngram_jaccard_pruned": 14,
     "dedup_ngram_containment": 14,
-    # - consume-batch e2e: texts staged as a bucketed table + the
-    #   independent prep jobs (stage-0 write, texts write, dim
-    #   checkpoints) overlapped (§2.6); the staged flagship is
-    #   ALWAYS_CHECK, its cached twin re-enters here:
-    "pipeline_consume_batch_e2e_cached": 14,
     # - PageRank's edge list cached partitioned+sorted on src so the
     #   per-iteration contribution join stops exchanging the edges:
     "graph_pagerank_fixed": 14,
     #
     # Window arithmetic (the r12-prescribed pattern): 1 pinned
-    # (pipeline_consume_batch_e2e) + 7 FORCE_RECHECK rows above = 8
-    # front slots, leaving 42 of the 50 for the stalest rotation
+    # (pipeline_consume_batch_e2e) + 6 FORCE_RECHECK rows above = 7
+    # front slots, leaving 43 of the 50 for the stalest rotation
     # cohort — no new registrations this round (optimization only).
 }
 

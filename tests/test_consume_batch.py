@@ -487,87 +487,10 @@ def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables):
     assert first_shaped.subTypes in ({"house": "VILLA"}, {"apartment": "PENTHOUSE"})
 
 
-def test_consume_batch_staged_equals_cached(spark, fixture_tables, tmp_path):
-    """stage0_staging (r6 review ask #1) must be a pure physical-plan
-    swap: writing stage-0 to a parquet staging table and scanning it
-    per slice yields row-identical output to the default cached path."""
-    _, t = fixture_tables
-    args = (
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    )
-    cached = consume_batch(*args, stage0_mode="cached")
-    staged = consume_batch(*args, stage0_staging=str(tmp_path / "stage0"))
-    assert staged.columns == cached.columns
-    canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
-    assert canon(staged) == canon(cached)
-    # the staging table actually exists and was scanned, not cached:
-    # the staged plan must read parquet files, never an InMemoryRelation
-    assert any((tmp_path / "stage0").glob("*.parquet"))
-    staged_plan = staged._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in staged_plan
-    assert "Scan parquet" in staged_plan
-    # the DEFAULT mode is staged since r9 (the r8 verdict's weak item):
-    # no mode argument must produce a staged plan, not a cached one
-    default_plan = consume_batch(*args)._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in default_plan
-    assert "Scan parquet" in default_plan
-    with pytest.raises(ValueError):
-        from pyspark import StorageLevel
-
-        consume_batch(
-            *args,
-            stage0_staging=str(tmp_path / "s2"),
-            stage0_storage=StorageLevel.MEMORY_AND_DISK,
-        )
-    with pytest.raises(ValueError):
-        consume_batch(*args, stage0_mode="nonsense")
-    # an EXPLICIT cached request cannot be silently overridden by the
-    # staging path's staged-mode implication (r9 ADVICE)
-    with pytest.raises(ValueError):
-        consume_batch(
-            *args, stage0_mode="cached", stage0_staging=str(tmp_path / "s3")
-        )
-
-
-def test_managed_staging_dirs_are_bounded_and_swept(spark, fixture_tables):
-    """The staged DEFAULT's managed per-call tmp dirs must not leak
-    (r9 verdict ask #7): each new managed call removes the previous
-    call's dir — a process holds at most ONE stage-0 copy — and the
-    atexit sweep removes the last one."""
-    import os
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines import (
-        consume_batch as cb_mod,
-    )
-
-    _, t = fixture_tables
-    args = (
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    )
-    first = consume_batch(*args)  # managed staged default
-    assert len(cb_mod._MANAGED_DIRS) == 1
-    first_dir = cb_mod._MANAGED_DIRS[0]
-    assert os.path.isdir(first_dir)
-    first.write.format("noop").mode("overwrite").save()  # consume fully
-    second = consume_batch(*args)
-    # the previous call's copy is gone; only the live one remains
-    assert not os.path.exists(first_dir)
-    assert len(cb_mod._MANAGED_DIRS) == 1
-    second_dir = cb_mod._MANAGED_DIRS[0]
-    assert second_dir != first_dir and os.path.isdir(second_dir)
-    second.write.format("noop").mode("overwrite").save()
-    # the atexit hook sweeps whatever remains
-    cb_mod._cleanup_managed_staging()
-    assert not os.path.exists(second_dir)
-    assert cb_mod._MANAGED_DIRS == []
-
-
 def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path):
     """tools/run_consume_batch.py end-to-end: same fixtures via parquet
-    inputs, all three reference sinks written, parquet row count equals
-    the in-process pipeline's."""
+    inputs, all three reference sinks written, and the parquet sink's
+    rows equal the lazy reference plan's."""
     import sys
     from pathlib import Path
 
@@ -592,22 +515,12 @@ def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path):
     expected = consume_batch(
         t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
         t["bundeslaender"], t["stadtlandkreise"], DATES,
-    ).count()
-    got = spark.read.parquet(str(out_dir / "parquet")).count()
-    assert got == expected > 0
-    # --stage0-staging must produce the same parquet sink row count
-    out_staged = tmp_path / "out_staged"
-    rc = cli.main(
-        [
-            "--input-dir", str(in_dir),
-            "--output-dir", str(out_staged),
-            "--partition-date", "2024-07-15",
-            "--days-ago", "10",
-            "--stage0-staging", str(tmp_path / "stage0_cli"),
-        ]
     )
-    assert rc == 0
-    assert spark.read.parquet(str(out_staged / "parquet")).count() == expected
+    got = spark.read.parquet(str(out_dir / "parquet")).select(*expected.columns)
+    canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
+    want = canon(expected)
+    assert len(want) > 0
+    assert canon(got) == want
     # one gzip file per slice for both text sinks that had rows
     for kind in ("csv", "json"):
         slices = list((out_dir / kind).iterdir())
@@ -615,36 +528,39 @@ def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path):
         assert all(any(p.name.endswith(".gz") for p in s.iterdir()) for s in slices)
 
 
-def test_e2e_slices_reuse_cached_merge(spark):
-    """The r2 verdict asked for plan evidence that the stage-0 merge is
-    computed once and REUSED by every slice (reference C1): after
-    cache + materialize, a slice chain's physical plan must read the
-    in-memory relation, not recompute the merge."""
+def test_e2e_slices_reuse_cached_merge(spark, sf_dir, tmp_path):
+    """Stage 0 is computed once and REUSED by every slice (reference
+    C1): a slice chain built on run_job's prep must scan the
+    ``_stage0_staging`` parquet table and must not re-plan any part of
+    the merge (its union, as-of join or change-log scan)."""
+    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
+        prepare_job,
+    )
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.consume_e2e import (
         _DATES,
         derive_consume_inputs,
     )
 
-    t = derive_consume_inputs(spark, "/root/testdata/sf0.001")
-    merged = merge_delete(filter_changelog(t["changelog"]), _DATES.first_day_past).cache()
-    try:
-        merged.count()
-        first = basedata_first(merged, t["texts"], 108, "BUY")
-        plan = first._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
-        # and the merge's own operators are NOT re-planned above the cache
-        assert "UnionExec" not in plan.split("InMemoryTableScan")[0]
-    finally:
-        merged.unpersist()
+    t = derive_consume_inputs(spark, sf_dir)
+    merged, tables, _ = prepare_job(t, _DATES, str(tmp_path))
+    assert any((tmp_path / "_stage0_staging").glob("*.parquet"))
+    first = basedata_first(merged, tables["texts"], 108, "BUY")
+    # every file the slice reads is one of the two staging tables
+    files = first.inputFiles()
+    assert any("/_stage0_staging/" in f for f in files)
+    assert all("/_stage0_staging/" in f or "/_texts_staging/" in f for f in files)
+    plan = first._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan
+    assert "InMemoryTableScan" not in plan
 
 
 def test_enrich_prepared_dims_equals_inline(spark, fixture_tables):
-    """r13 §2.4: the 4-slice loop shares ONE set of slice-independent
+    """§2.4: the 4-slice loop shares ONE set of slice-independent
     enrichment inputs (prepare_enrich_dims) instead of re-deriving the
     visibility filter / fraud argmax / counter summaries per slice.
     The prepared path — including the materialized (localCheckpoint)
-    form run_slices_concurrent uses — must be row-identical to the
-    inline default for every slice."""
+    form prepare_job builds — must be row-identical to the inline
+    default for every slice."""
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
         prepare_enrich_dims,
     )

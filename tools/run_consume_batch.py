@@ -11,6 +11,8 @@ sinks (gzip JSON nested, gzip CSV flat, month-partitioned parquet).
 visibility, fraud, contacts, visits, bundeslaender, stadtlandkreise``
 (schemas: see pipelines.consume_batch docstrings / tests). ``--days-ago
 full_refresh`` rewinds to the data epoch like the reference's flag.
+The output dir gets ``csv/<slice>``, ``json/<slice>`` and ``parquet/``,
+plus the job's staging tables ``_stage0_staging`` and ``_texts_staging``.
 """
 
 from __future__ import annotations
@@ -23,27 +25,12 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from st_bigdata_consume_batch_ma_with_cr_ecd_spark.operators.setops import union_slices
 from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
+    INPUT_TABLES,
     JobDates,
-    filter_changelog,
-    merge_delete,
+    run_job,
 )
 from st_bigdata_consume_batch_ma_with_cr_ecd_spark.session import get_spark
-from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sinks.writers import (
-    overwrite_partitions,
-)
-
-INPUT_TABLES = (
-    "changelog",
-    "texts",
-    "visibility",
-    "fraud",
-    "contacts",
-    "visits",
-    "bundeslaender",
-    "stadtlandkreise",
-)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -53,24 +40,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--partition-date", default=date.today().isoformat())
     ap.add_argument("--days-ago", default="10", help="integer lookback or 'full_refresh'")
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument(
-        "--stage0-mode",
-        choices=("staged", "cached"),
-        default="staged",
-        help="where the shared stage-0 merge lives. 'staged' (default "
-        "since r9): written once to a parquet staging table and scanned "
-        "per slice — wins at every measured scale >= sf0.1 and flattens "
-        "the 64x cache-pressure knee (SCALE.md: 86.5s vs 230.8s at 64x, "
-        "6.9s vs 11.8s at sf0.1). 'cached': block-manager cache — the "
-        "small-input variant, faster only when the merged change-log is "
-        "tiny enough that the parquet round-trip dominates",
-    )
-    ap.add_argument(
-        "--stage0-staging",
-        default=None,
-        help="explicit staging path for staged mode (default: "
-        "<output-dir>/_stage0_staging)",
-    )
     args = ap.parse_args(argv)
 
     spark = get_spark("consume-batch-job", cpus=args.cpus)
@@ -78,33 +47,8 @@ def main(argv: list[str] | None = None) -> int:
     days: int | str = args.days_ago if args.days_ago == "full_refresh" else int(args.days_ago)
     dates = JobDates.resolve(date.fromisoformat(args.partition_date), days)
 
-    # stage 0 once, materialized up front; every slice reads it
-    # (reference C1 policy; staged mode — the default since r9 — writes
-    # the merge to a parquet staging table instead of the cache). The
-    # four slice chains + sinks are independent — run them concurrently
-    # from a driver thread pool (Spark schedules jobs from multiple
-    # threads onto one session; measured ~1.9x vs the serial loop).
-    out_root = Path(args.output_dir)
-    merged = merge_delete(filter_changelog(t["changelog"]), dates.first_day_past)
-    if args.stage0_mode == "staged":
-        staging = args.stage0_staging or str(out_root / "_stage0_staging")
-        merged.write.mode("overwrite").parquet(staging)
-        merged = spark.read.parquet(staging)
-    else:
-        merged = merged.cache()
-        merged.count()
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
-        run_slices_concurrent,
-    )
-
-    parts, rows_per_slice = run_slices_concurrent(
-        t, merged, dates, str(out_root), count_rows=True
-    )
-
-    union = union_slices(parts, "ALL")
-    overwrite_partitions(union, str(out_root / "parquet"), ["partitionMonth"])
-    merged.unpersist()
+    out_root = str(Path(args.output_dir))
+    rows_per_slice = run_job(t, dates, out_root)
 
     print(
         json.dumps(
@@ -113,7 +57,7 @@ def main(argv: list[str] | None = None) -> int:
                 "window": [dates.first_day_past, dates.partition_month],
                 "rows_per_slice": rows_per_slice,
                 "total_rows": sum(rows_per_slice.values()),
-                "output_dir": str(out_root),
+                "output_dir": out_root,
             }
         )
     )

@@ -187,12 +187,11 @@ def probes(
         (F.col("n_triangles") * 8).alias("est_triangles")
     )
 
-    # consume-batch e2e COMPUTE (derive + stage-0 merge + 4 slice
-    # chains + union), sinks excluded: the gzip files=1 sinks are the
-    # reference's fixed output contract (serial by design) and would
-    # only measure gzip throughput here.
+    # consume-batch nightly job end to end through run_job, the path
+    # the CLI runs: staged prep, the 4 concurrent slice chains with
+    # their gzip CSV/JSON sinks, and the parquet sink of the union
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
-        consume_batch,
+        run_job,
     )
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.consume_e2e import (
         _DATES,
@@ -206,40 +205,15 @@ def probes(
     ev_m = amplify(ev, mult, ["event_id", "user_id"])
     t = derive_consume_inputs(spark, sf_dir, events=ev_m)
 
-    def e2e_compute() -> None:
-        # the e2e workload's own shape: materialize the shared stage-0
-        # merge FIRST (one job), then the 4 slice chains read the
-        # InMemoryRelation — timing the unmaterialized plan instead
-        # recomputes stage-0 once per slice partition-tree
-        df = consume_batch(
-            t["changelog"], t["texts"], t["visibility"], t["fraud"],
-            t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-            _DATES,
-            stage0_mode="cached",
-            materialize=True,
-        )
-        df.write.format("noop").mode("overwrite").save()
-
-    def e2e_staged() -> None:
-        # staging twin (r6 review ask #1): stage-0 written ONCE to a
-        # parquet staging table, slices scan the files — the mode for
-        # when stage-0 outgrows the cache tier (the measured 64x knee)
-        import os
+    def consume_e2e() -> None:
         import shutil
         import tempfile
 
-        staging = os.path.join(tempfile.gettempdir(), "spark_graft_probe_stage0")
-        shutil.rmtree(staging, ignore_errors=True)
+        out_root = tempfile.mkdtemp(prefix="spark_graft_probe_e2e_")
         try:
-            df = consume_batch(
-                t["changelog"], t["texts"], t["visibility"], t["fraud"],
-                t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-                _DATES,
-                stage0_staging=staging,
-            )
-            df.write.format("noop").mode("overwrite").save()
+            run_job(t, _DATES, out_root)
         finally:
-            shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(out_root, ignore_errors=True)
 
     # image near-dedup chain (synth BMP -> real decode/dHash -> Hamming
     # LSH -> pinned verify). The pattern space scales WITH the mult
@@ -1241,8 +1215,7 @@ def probes(
         "recsys_cooccur": (recsys, (n_li + n_o) * mult),
         "triangle_count": (triangles, n_li * mult),
         "triangle_count_approx": (triangles_approx, n_li * mult),
-        "consume_e2e_compute": (e2e_compute, n_ev * mult),
-        "consume_e2e_staged": (e2e_staged, n_ev * mult),
+        "consume_e2e": (consume_e2e, n_ev * mult),
         "kcore_peel": (kcore_compute, n_li * mult),
         "image_dedup": (image_dedup_compute, n_docs_i * mult),
         "image_dedup_k3": (image_dedup_k3_compute, n_docs_i * mult),
@@ -1351,7 +1324,7 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         )
         assert_no_checkpoint_broadcasts(plan, "fuzzy_er_closure")
 
-    def consume_e2e_no_data_sized_broadcast() -> None:
+    def consume_e2e_plan_is_join_safe() -> None:
         from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
             consume_batch,
         )
@@ -1363,59 +1336,19 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         ev_m = amplify(ev, mult, ["event_id", "user_id"])
         t = derive_consume_inputs(spark, sf_dir, events=ev_m)
-        df = consume_batch(
-            t["changelog"], t["texts"], t["visibility"], t["fraud"],
-            t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-            _DATES,
-            stage0_mode="cached",
-            materialize=True,
+        plan = final_plan(
+            consume_batch(
+                t["changelog"], t["texts"], t["visibility"], t["fraud"],
+                t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
+                _DATES,
+            )
         )
-        try:
-            plan = final_plan(df)
-        finally:
-            spark.catalog.clearCache()  # consume_batch caches its stage-0 merge
         assert "CartesianProduct" not in plan, "e2e grew an unguarded cross join"
         assert "BroadcastNestedLoopJoin" not in plan, (
             "e2e grew a nested-loop join — a non-equi condition stopped "
             "planning as hash/merge"
         )
-        assert_no_checkpoint_broadcasts(plan, "consume_e2e_compute")
-
-    def consume_e2e_staged_scans_parquet() -> None:
-        import os
-        import shutil
-        import tempfile
-
-        from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
-            consume_batch,
-        )
-        from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.consume_e2e import (
-            _DATES,
-            derive_consume_inputs,
-        )
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ev_m = amplify(ev, mult, ["event_id", "user_id"])
-        t = derive_consume_inputs(spark, sf_dir, events=ev_m)
-        staging = os.path.join(tempfile.gettempdir(), "spark_graft_audit_stage0")
-        shutil.rmtree(staging, ignore_errors=True)
-        try:
-            df = consume_batch(
-                t["changelog"], t["texts"], t["visibility"], t["fraud"],
-                t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-                _DATES,
-                stage0_staging=staging,
-            )
-            plan = final_plan(df)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        # staging mode must never fall back to the cache tier, and the
-        # staged scan must stay join-safe like the cached plan
-        assert "InMemoryTableScan" not in plan, "staged e2e still reads the cache"
-        assert "Scan parquet" in plan, "staged e2e lost its parquet scan"
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert_no_checkpoint_broadcasts(plan, "consume_e2e_staged")
+        assert_no_checkpoint_broadcasts(plan, "consume_e2e")
 
     def jaccard_verify_pins_hold() -> None:
         from st_bigdata_consume_batch_ma_with_cr_ecd_spark.llm.dedup import (
@@ -1770,10 +1703,9 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         assert "BroadcastNestedLoopJoin" not in plan
         assert_no_checkpoint_broadcasts(plan, "image_dedup_k3")
 
-    # e2e FIRST: its materialized stage-0 cache is the biggest single
-    # allocation at 64x, so it must run against a clean heap; the fuzzy
-    # audit's checkpoint blocks are unpersisted explicitly either way
-    # (the ordering + cleanup is what the first 64x run OOM'd without)
+    # e2e FIRST in the audit order, so it plans against a clean heap;
+    # the fuzzy audit's checkpoint blocks are unpersisted explicitly
+    # either way (the cleanup is what the first 64x run OOM'd without)
     def hybrid_rrf_fusion_stays_pool_bounded() -> None:
         # the hybrid retrieval's load-bearing plan facts at the audit
         # mult: the RRF fusion keeps its full-outer shape over
@@ -1959,8 +1891,7 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         )
 
     return {
-        "consume_e2e_compute": consume_e2e_no_data_sized_broadcast,
-        "consume_e2e_staged": consume_e2e_staged_scans_parquet,
+        "consume_e2e": consume_e2e_plan_is_join_safe,
         "fuzzy_er_closure": fuzzy_er_round_join_stays_smj,
         "fuzzy_k2": fuzzy_k2_stays_grouped_no_join,
         "jaccard_verify": jaccard_verify_pins_hold,
@@ -2411,8 +2342,8 @@ def main() -> int:
     # fit sf0.1 carry ~24M rows each at 64x and blow the sort heap —
     # the 64x jaccard audit OOMs at 32), but scaling GLOBALLY is wrong:
     # consume_e2e at 64x measured 358s under 128 partitions vs 185s at
-    # 32 (many small stages + the stage-0 cache pay per-task overhead,
-    # and cpus*mult/4 = 512 was slower for jaccard too). So the scale-up
+    # 32 (many small stages pay per-task overhead, and cpus*mult/4 =
+    # 512 was slower for jaccard too). So the scale-up
     # is opt-in per probe; AQE coalesces the small stages back down.
     SCALED_SHUFFLE = {
         "jaccard_verify": lambda mult: max(cpus, cpus * mult // 16),
@@ -2463,8 +2394,7 @@ def main() -> int:
                 run(obj)
                 dt = time.time() - t0
                 spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
-                # consume_batch caches its stage-0 merge (intended within a
-                # run: 4 slices share it); drop it so runs don't accumulate
+                # drop whatever a probe left cached so runs don't accumulate
                 spark.catalog.clearCache()
                 results.setdefault(name, {})[mult] = dt
                 rate = rows / dt
