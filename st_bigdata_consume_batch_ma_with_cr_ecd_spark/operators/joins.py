@@ -65,7 +65,12 @@ def join_preaggregated(
 
 
 def not_in_anti_join(
-    left: DataFrame, right_keys: DataFrame, left_key: str, right_key: str | None = None
+    left: DataFrame,
+    right_keys: DataFrame,
+    left_key: str,
+    right_key: str | None = None,
+    *,
+    by: Sequence[str] = (),
 ) -> DataFrame:
     """J6: SQL ``left_key NOT IN (SELECT right_key FROM ...)``, faithfully.
 
@@ -74,8 +79,17 @@ def not_in_anti_join(
     Catalyst gets this right when expressed as a NOT IN subquery — so we
     express it exactly that way via the DataFrame API equivalent:
     a ``left_anti`` join guarded by the two null checks.
+
+    ``by`` correlates the subquery on columns both sides carry:
+    ``left_key NOT IN (SELECT right_key FROM r WHERE r.g = l.g)``. A
+    NULL key then empties only its own group, and a group with no right
+    rows keeps all its left rows, NULL keys included (``x NOT IN ()`` is
+    true). Every join is an equi-join on the group columns, so several
+    independent NOT INs run as one plan without a nested-loop join.
     """
     rk = right_key or left_key
+    if by:
+        return _grouped_not_in(left, right_keys, left_key, rk, list(by))
     keys = right_keys.select(F.col(rk).alias("__nik"))
     has_null_key = keys.where(F.col("__nik").isNull()).limit(1)
     # left_anti with null-safe guard: drop left-null keys (3-valued logic
@@ -91,6 +105,29 @@ def not_in_anti_join(
         filtered.join(F.broadcast(marker), F.lit(True), "left")
         .where(F.col("__has_null").isNull())
         .drop("__has_null")
+    )
+
+
+def _grouped_not_in(
+    left: DataFrame, right_keys: DataFrame, left_key: str, right_key: str, by: list[str]
+) -> DataFrame:
+    groups = [f"__nig{i}" for i in range(len(by))]
+    keys = right_keys.select(
+        *(F.col(g).alias(a) for g, a in zip(by, groups)), F.col(right_key).alias("__nik")
+    )
+    same_group = [F.col(g) == F.col(a) for g, a in zip(by, groups)]
+    # one row per group that has right rows: whether any of its keys is
+    # NULL. Broadcast, because group columns are often low-cardinality
+    # and a shuffle on them would put a whole group in one task.
+    flags = keys.groupBy(*groups).agg(F.max(F.col("__nik").isNull()).alias("__has_null"))
+    unmatched = left.join(keys, [*same_group, F.col(left_key) == F.col("__nik")], "left_anti")
+    return (
+        unmatched.join(F.broadcast(flags), same_group, "left")
+        .where(
+            F.col("__has_null").isNull()
+            | (~F.col("__has_null") & F.col(left_key).isNotNull())
+        )
+        .drop("__has_null", *groups)
     )
 
 

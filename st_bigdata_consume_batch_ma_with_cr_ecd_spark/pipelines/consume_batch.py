@@ -12,7 +12,8 @@ Stage map (reference citations):
 - ``merge_delete``       — script/static_files/queries/0-merge_delete_query.sql
   (delete-event attribute backfill: as-of inner join + top-1 + union)
 - ``basedata_first``     — 1-basedata_first_query.sql (per-day latest
-  version + text join), parameterized by (geoid prefix, distribution)
+  version + text join); keeps the rows of the requested slices and tags
+  each with its slice (:data:`SLICE_KEY`)
 - ``basedata_enrich``    — 2-basedata_df_query.sql (visibility inner
   join + fraud argmax + counter sums, 3 left joins)
 - ``basedata_final``     — 3-basedata_df_final_query.sql (stale-id NOT
@@ -22,12 +23,19 @@ Stage map (reference citations):
 - ``shape_json_output``  — script/helper.py:99-186 (subTypes map,
   distribution price projection, renames/drops, changelog metadata,
   flat->nested struct schema)
-- ``build_slice``        — stages 1-3 + modify_data for one slice
-- ``consume_batch``      — the 4-slice country/distribution loop with
-  UNION ALL accumulation as one lazy plan (script/main.py:300-368)
+- ``build_slices``       — stages 1-3 + modify_data for a set of slices
+  as one frame
+- ``consume_batch``      — the reference's 4-slice country/distribution
+  loop with UNION ALL accumulation (script/main.py:300-368), as one
+  lazy pass over all four slices
 - ``run_job``            — the nightly job run end to end: staged prep,
-  concurrent slices with their CSV/JSON sinks, the parquet sink
-  (script/main.py:300-416)
+  the one-pass slice frame cached and sunk to per-slice CSV/JSON, the
+  parquet sink (script/main.py:300-416)
+
+The reference runs stages 1-3 once per slice. Here the slice key is one
+more column in every window partition, group-by and join key of those
+stages, so one plan computes all slices: stage 0 is read once and each
+stage shuffles once, not once per slice.
 
 Semantics preserved on purpose (SURVEY.md §4): the visibility join is
 multiplicity-preserving INNER (not semi); stale-id elimination is
@@ -38,18 +46,21 @@ dropped (inner as-of join); ``fraudLevelId <= 0`` drops null-fraud rows.
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import date, timedelta
+from functools import reduce
+from itertools import combinations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import prefix_select, strip_prefix
 from ..functions.maps import keyed_map_column
 from ..functions.nesting import nest_columns
 from ..functions.whenchain import when_chain
-from ..operators import partitioning
 from ..operators.asof import asof_join
 from ..operators.dedup import top_n_per_group
 from ..operators.joins import (
@@ -89,10 +100,6 @@ INPUT_TABLES = (
     "bundeslaender",
     "stadtlandkreise",
 )
-
-#: Catalog name of the bucketed texts staging table.
-TEXTS_TABLE = "consume_batch_texts"
-
 
 @dataclass(frozen=True)
 class JobDates:
@@ -142,6 +149,32 @@ class SliceSpec:
 DEFAULT_SLICES = tuple(
     SliceSpec(geoid, dist) for geoid in (108, 103) for dist in ("BUY", "RENT")
 )
+
+#: The columns that name a row's slice from stage 1 on. They lead every
+#: window partition, group-by and join key of stages 1-3, so the slices
+#: of one frame never see each other's rows.
+SLICE_KEY = ("partitionGeoid", "cleaned_classified_distributionType")
+
+
+def _in_slice(spec: SliceSpec) -> Column:
+    """Whether a stage-0 row belongs to ``spec``."""
+    return F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID").startswith(
+        str(spec.geoid)
+    ) & (F.col("cleaned_classified_distributionType") == spec.distribution_type)
+
+
+def _tagged_as(spec: SliceSpec) -> Column:
+    """Whether a row tagged by :func:`basedata_first` belongs to ``spec``."""
+    return (F.col(SLICE_KEY[0]) == spec.geoid) & (F.col(SLICE_KEY[1]) == spec.distribution_type)
+
+
+def _check_disjoint(slices: Sequence[SliceSpec]) -> None:
+    if not slices:
+        raise ValueError("at least one slice is required")
+    for a, b in combinations(slices, 2):
+        ga, gb = str(a.geoid), str(b.geoid)
+        if a.distribution_type == b.distribution_type and (ga.startswith(gb) or gb.startswith(ga)):
+            raise ValueError(f"slices {a} and {b} overlap: a row would belong to both")
 
 
 def payload_columns(df: DataFrame) -> list[str]:
@@ -198,18 +231,33 @@ def merge_delete(filtered: DataFrame, first_day_past: str) -> DataFrame:
 
 
 def basedata_first(
-    merged: DataFrame, texts: DataFrame, geoid: int, distribution_type: str
+    merged: DataFrame, texts: DataFrame, slices: Sequence[SliceSpec]
 ) -> DataFrame:
     """1-basedata_first_query.sql — slice filters, latest version per
-    (classifiedId, change-day), 8-column text enrichment."""
+    (slice, classifiedId, change-day), 8-column text enrichment.
+
+    Keeps the rows of ``slices``, which must be disjoint, and adds
+    ``partitionGeoid``: the geoid of the slice each row belongs to."""
+    _check_disjoint(slices)
+    matches = [_in_slice(spec) for spec in slices]
     sliced = merged.where(
-        F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID").startswith(str(geoid))
-        & (F.col("cleanupdataproblems") <= 3)
-        & (F.col("cleaned_classified_distributionType") == distribution_type)
+        reduce(operator.or_, matches) & (F.col("cleanupdataproblems") <= 3)
+    ).withColumn(
+        # the otherwise is never reached (the filter kept matching rows
+        # only); a literal there keeps the column non-nullable, so the
+        # parquet sink stores it as a required column
+        SLICE_KEY[0],
+        when_chain(
+            [(m, spec.geoid) for m, spec in zip(matches, slices)], otherwise=slices[-1].geoid
+        ),
     )
     latest = top_n_per_group(
         sliced,
-        [F.col("classified_metaData_classifiedId"), F.to_date(F.col("classified_metaData_changeDate"))],
+        [
+            *map(F.col, SLICE_KEY),
+            F.col("classified_metaData_classifiedId"),
+            F.to_date(F.col("classified_metaData_changeDate")),
+        ],
         [
             F.col("classified_metaData_changeDate").desc(),
             F.col("partitionChangeDate").desc(),
@@ -223,7 +271,7 @@ def basedata_first(
 
 #: 2-basedata_df_query.sql:27-63 — the counter sums and their COALESCE
 #: defaults, factored so the once-per-job summaries
-#: (:func:`prepare_enrich_dims`) and the per-slice joins
+#: (:func:`prepare_enrich_dims`) and their joins
 #: (:func:`basedata_enrich`) can never drift apart. Functions, not
 #: module constants: Column construction needs an active SparkContext.
 _CONTACT_NAMES = (
@@ -261,12 +309,11 @@ def prepare_enrich_dims(
     visits: DataFrame,
     dates: JobDates,
 ) -> dict[str, DataFrame]:
-    """The slice-INDEPENDENT inputs of ``basedata_enrich``, factored
-    out so the 4-slice loop computes each exactly once (§2.4): the
+    """The slice-INDEPENDENT inputs of ``basedata_enrich``: the
     active-visibility key set, the fraud argmax, and the contact/visit
-    counter summaries do not depend on (geoid, distribution), yet the
-    concurrent slice chains are separate Spark jobs — without sharing,
-    every chain re-runs all four distinct/group-by shuffles."""
+    counter summaries do not depend on (geoid, distribution). Factored
+    out so :func:`prepare_job` can materialize them alongside stage 0
+    (§2.4)."""
     active = visibility.where(
         (F.col("aktivbis") >= F.to_date(F.lit(dates.first_day_current_month)))
         & (F.col("aktivab") < F.to_date(F.lit(dates.partition_date)))
@@ -326,10 +373,9 @@ def basedata_enrich(
     counter sums, three left joins.
 
     ``dims`` (optional) supplies the slice-independent inputs prebuilt
-    by :func:`prepare_enrich_dims` — callers enriching several slices
-    pass one shared (ideally materialized) set instead of re-deriving
-    the aggregates per slice; the default path builds them inline and
-    is row-identical by construction (same expressions, same joins)."""
+    by :func:`prepare_enrich_dims`, e.g. materialized ahead of the
+    slice plan; the default path builds them inline and is
+    row-identical by construction (same expressions, same joins)."""
     cid = "classified_metaData_classifiedId"
     if dims is None:
         dims = prepare_enrich_dims(visibility, fraud_events, contacts, visits, dates)
@@ -353,40 +399,44 @@ def basedata_enrich(
 
 
 def basedata_final(
-    base: DataFrame, first: DataFrame, dates: JobDates, price_amount_column: str
+    base: DataFrame, first: DataFrame, dates: JobDates, slices: Sequence[SliceSpec]
 ) -> DataFrame:
     """3-basedata_df_final_query.sql — stale-id NOT IN elimination,
     fraud filter, per-(id, price) current-month latest UNION last
-    pre-month record. ``partitionChangeDate`` compares as ISO string
-    here (reference lines 54/65), unlike stage 0's ``to_date``."""
+    pre-month record, each within its slice; the price is the column of
+    the row's slice (:attr:`SliceSpec.price_amount_column`).
+    ``partitionChangeDate`` compares as ISO string here (reference lines
+    54/65), unlike stage 0's ``to_date``."""
     cid = "classified_metaData_classifiedId"
     ts = "classified_metaData_changeDate"
+    key = [*SLICE_KEY, cid]
 
-    base_max = base.groupBy(cid).agg(F.max(ts).alias("m"))
+    base_max = base.groupBy(*key).agg(F.max(ts).alias("m"))
     all_max = (
         first.where(F.col(ts) < dates.first_day_current_month)
-        .groupBy(cid)
+        .groupBy(*key)
         .agg(F.max(ts).alias("m_all"))
     )
     invalid = (
-        base_max.join(all_max, cid, "left")
+        base_max.join(all_max, key, "left")
         .where(F.col("m") < F.col("m_all"))
-        .select(F.col(cid).alias("invalid_id"))
+        .select(*SLICE_KEY, F.col(cid).alias("invalid_id"))
     )
-    final = not_in_anti_join(base, invalid, cid, "invalid_id").where(
+    final = not_in_anti_join(base, invalid, cid, "invalid_id", by=SLICE_KEY).where(
         F.col("fraudLevelId") <= 0
     )
 
+    price = when_chain([(_tagged_as(spec), F.col(spec.price_amount_column)) for spec in slices])
     order = [F.col(ts).desc(), F.col("partitionChangeDate").desc(), F.col("id").desc()]
     current = top_n_per_group(
         final.where(F.col("partitionChangeDate") >= dates.first_day_current_month),
-        [F.col(cid), F.col(price_amount_column)],
+        [*map(F.col, key), price],
         order,
         rank_col="row_num",
     )
     previous = top_n_per_group(
         final.where(F.col("partitionChangeDate") < dates.first_day_current_month),
-        [F.col(cid)],
+        list(map(F.col, key)),
         order,
         rank_col="row_num",
     )
@@ -395,14 +445,14 @@ def basedata_final(
 
 def modify_data(
     final: DataFrame,
-    geoid: int,
     partition_month: str,
     bundeslaender: DataFrame,
     stadtlandkreise: DataFrame,
 ) -> DataFrame:
     """script/main.py:157-193 — numeric/text cleanup, cleaned_ prefix
-    strip (single projection, not N renames), geo enrichment for Germany
-    only, drop list, partition columns."""
+    strip (single projection, not N renames), geo enrichment for rows
+    with ``partitionGeoid`` 108 (Germany) only, drop list, partition
+    columns last."""
     df = final.withColumn(
         "cleaned_classified_structure_rooms_numberofrooms",
         F.round(F.col("cleaned_classified_structure_rooms_numberofrooms")).cast("int"),
@@ -411,27 +461,25 @@ def modify_data(
     )
     df = strip_prefix(df, "cleaned_")
 
-    if geoid == 108:
-        geo_key = F.substring(F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID"), 1, 5)
-        df = broadcast_lookup_join(
-            df, bundeslaender, geo_key.cast("int"), "geoid", dim_cols=["geoid", "bundesland"]
-        )
-        geo_key8 = F.substring(F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID"), 1, 8)
-        df = broadcast_lookup_join(
-            df, stadtlandkreise, geo_key8.cast("int"), "geoid", dim_cols=["geoid", "landkreis"]
-        )
-        df = df.withColumnRenamed("bundesland", "geo_state").withColumnRenamed(
-            "landkreis", "geo_userDefined_immoWelt_county"
-        )
-    else:
-        df = df.withColumn("geo_state", F.lit(None).cast("string")).withColumn(
-            "geo_userDefined_immoWelt_county", F.lit(None).cast("string")
-        )
-
-    df = df.drop(*[c for c in GEO_DROP_COLUMNS if c in df.columns])
-    return df.withColumn("partitionGeoid", F.lit(geoid)).withColumn(
-        "partitionMonth", F.lit(partition_month)
+    # other countries get a NULL key, which matches nothing, so their
+    # geo columns stay NULL
+    germany = F.col("partitionGeoid") == 108
+    geo = F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID")
+    df = broadcast_lookup_join(
+        df, bundeslaender, F.when(germany, F.substring(geo, 1, 5).cast("int")), "geoid",
+        dim_cols=["geoid", "bundesland"],
     )
+    df = broadcast_lookup_join(
+        df, stadtlandkreise, F.when(germany, F.substring(geo, 1, 8).cast("int")), "geoid",
+        dim_cols=["geoid", "landkreis"],
+    )
+    df = df.withColumnsRenamed(
+        {"bundesland": "geo_state", "landkreis": "geo_userDefined_immoWelt_county"}
+    )
+    df = df.drop(*[c for c in GEO_DROP_COLUMNS if c in df.columns])
+    return df.select(
+        *[c for c in df.columns if c != "partitionGeoid"], "partitionGeoid"
+    ).withColumn("partitionMonth", F.lit(partition_month))
 
 
 ESTATE_SUBTYPE_SOURCE = {
@@ -502,25 +550,26 @@ def shape_json_output(
     return nest_columns(out, sep="_")
 
 
-def build_slice(
+def build_slices(
     merged: DataFrame,
     tables: dict[str, DataFrame],
-    spec: SliceSpec,
+    slices: Sequence[SliceSpec],
     dates: JobDates,
     dims: dict[str, DataFrame],
 ) -> DataFrame:
-    """Stages 1-3 + ``modify_data`` for one slice of the
-    country/distribution matrix, built on the shared stage-0
-    ``merged`` and the shared enrichment ``dims``."""
-    first = basedata_first(merged, tables["texts"], spec.geoid, spec.distribution_type)
+    """Stages 1-3 + ``modify_data`` for ``slices`` of the
+    country/distribution matrix as one frame, built on the shared
+    stage-0 ``merged`` and the shared enrichment ``dims``. Each row
+    carries its slice in ``partitionGeoid`` and
+    ``classified_distributionType``."""
+    first = basedata_first(merged, tables["texts"], slices)
     base = basedata_enrich(
         first, tables["visibility"], tables["fraud"], tables["contacts"],
         tables["visits"], dates, dims=dims,
     )
-    final = basedata_final(base, first, dates, spec.price_amount_column)
+    final = basedata_final(base, first, dates, slices)
     return modify_data(
-        final, spec.geoid, dates.partition_month,
-        tables["bundeslaender"], tables["stadtlandkreise"],
+        final, dates.partition_month, tables["bundeslaender"], tables["stadtlandkreise"]
     )
 
 
@@ -536,14 +585,13 @@ def consume_batch(
     dates: JobDates,
 ) -> DataFrame:
     """The full job as one lazy plan (script/main.py:300-368): stage 0,
-    stages 1-3 + modify_data per slice, UNION ALL accumulation.
+    then stages 1-3 + modify_data over all :data:`DEFAULT_SLICES` in
+    one pass; its rows are the UNION ALL of the reference's per-slice
+    results.
 
     Nothing is staged, cached or written, so this is the reference plan
-    that tests and plan audits compare against; :func:`run_job` runs
-    the same per-slice chains on staged prep. The slice-independent
-    enrichment inputs are built once and shared by all four slice
-    subtrees, so under the single downstream action each summary
-    becomes one exchange via ReuseExchange instead of four (§2.4)."""
+    that tests and plan audits compare against; :func:`run_job` builds
+    the same frame on staged prep."""
     tables = dict(
         zip(
             INPUT_TABLES,
@@ -553,38 +601,28 @@ def consume_batch(
     )
     merged = merge_delete(filter_changelog(changelog), dates.first_day_past)
     dims = prepare_enrich_dims(visibility, fraud_events, contacts, visits, dates)
-    return union_slices(
-        [build_slice(merged, tables, spec, dates, dims) for spec in DEFAULT_SLICES], "ALL"
-    )
+    return build_slices(merged, tables, DEFAULT_SLICES, dates, dims)
 
 
 def prepare_job(
     tables: dict[str, DataFrame], dates: JobDates, out_root: str
-) -> tuple[DataFrame, dict[str, DataFrame], dict[str, DataFrame]]:
-    """The job's three prep jobs, run concurrently from one driver pool
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """The job's prep jobs, run concurrently from one driver pool
     because none reads another's output (§2.6 "overlap independent
-    jobs"). Returns the staged stage-0 frame, ``tables`` with the staged
-    texts, and the checkpointed enrichment dims.
+    jobs"). Returns the staged stage-0 frame and the checkpointed
+    enrichment dims.
 
-    - Stage 0 is written once to ``<out_root>/_stage0_staging`` and
-      every slice scans the files. A parquet staging table has no
+    - Stage 0 is written once to ``<out_root>/_stage0_staging`` and the
+      slice frame scans the files. A parquet staging table has no
       cache-residency limit and gets columnar scans with pruning; the
       block-manager cache it replaced lost at every measured scale
       >= sf0.1 (6.9 s vs 11.8 s at sf0.1, 86.5 s vs 230.8 s at 64x,
       SCALE.md).
-    - The texts table is staged bucketed and sorted by ``id``
-      (:func:`operators.partitioning.stage_bucketed_by_key`). At sf0.1
-      the planner broadcasts the small texts side anyway; past the
-      broadcast threshold each slice's sort-merge join would otherwise
-      shuffle and sort the whole texts projection once per slice
-      (tests/test_plans.py pins the exchange-free texts side).
-    - The four :func:`prepare_enrich_dims` frames are checkpointed
-      before the slice pool starts: the slice chains are separate
-      concurrent Spark jobs, so without this each would re-run the
-      visibility filter, the fraud argmax and both counter group-bys,
-      racing each other into a cold cache (§2.4). The summaries are
-      key-count-sized; ``active`` is the filtered visibility
-      projection, never change-log-sized.
+    - The four :func:`prepare_enrich_dims` frames are checkpointed so
+      their shuffles overlap the stage-0 write instead of running after
+      it inside the slice plan. The summaries are key-count-sized;
+      ``active`` is the filtered visibility projection, never
+      change-log-sized.
     """
     spark = tables["changelog"].sparkSession
     merged = merge_delete(filter_changelog(tables["changelog"]), dates.first_day_past)
@@ -597,18 +635,10 @@ def prepare_job(
     raw_dims = prepare_enrich_dims(
         tables["visibility"], tables["fraud"], tables["contacts"], tables["visits"], dates
     )
-    with ThreadPoolExecutor(max_workers=2 + len(raw_dims)) as pool:
+    with ThreadPoolExecutor(max_workers=1 + len(raw_dims)) as pool:
         f_stage0 = pool.submit(stage0)
-        f_texts = pool.submit(
-            partitioning.stage_bucketed_by_key,
-            tables["texts"], "id", f"{out_root}/_texts_staging", TEXTS_TABLE,
-        )
         f_dims = {k: pool.submit(v.localCheckpoint, eager=True) for k, v in raw_dims.items()}
-        return (
-            f_stage0.result(),
-            {**tables, "texts": f_texts.result()},
-            {k: f.result() for k, f in f_dims.items()},
-        )
+        return f_stage0.result(), {k: f.result() for k, f in f_dims.items()}
 
 
 def run_slices_concurrent(
@@ -619,32 +649,36 @@ def run_slices_concurrent(
     dims: dict[str, DataFrame],
     *,
     json_clock: str | None = None,
-) -> tuple[list[DataFrame], dict[str, int]]:
-    """Build each slice with :func:`build_slice` on the prepared
-    ``merged`` and ``dims``, count it, and sink it to single-file gzip
-    CSV + gzip JSON. The four chains run concurrently from a driver
-    thread pool: Spark schedules jobs from several threads onto one
-    session, so the single-task gzip writes and window chains overlap
-    instead of running in the reference's serial loop (~1.9x at sf0.1).
+) -> tuple[DataFrame, dict[str, int]]:
+    """Build all :data:`DEFAULT_SLICES` as one frame with
+    :func:`build_slices` on the prepared ``merged`` and ``dims``, cache
+    it, count every slice with one grouped count, and sink each slice
+    to single-file gzip CSV + gzip JSON from a filter of the cache. The
+    eight single-task gzip writes run from a driver thread pool: Spark
+    schedules jobs from several threads onto one session, so they
+    overlap instead of running in the reference's serial loop.
 
-    Returns the cached slice frames, which the caller unions, sinks and
-    unpersists, and the row count of each slice by its tag."""
+    Returns the cached frame, which the caller sinks and unpersists,
+    and the row count of each slice by its tag (0 for an empty slice)."""
+    frame = build_slices(merged, tables, DEFAULT_SLICES, dates, dims).cache()
+    geoid, dist = F.col("partitionGeoid"), F.col("classified_distributionType")
+    counts = {f"{spec.geoid}_{spec.distribution_type}": 0 for spec in DEFAULT_SLICES}
+    for g, d, n in frame.groupBy(geoid, dist).count().collect():
+        counts[f"{g}_{d}"] = n
 
-    def build_and_sink(spec: SliceSpec) -> tuple[str, int, DataFrame]:
-        sliced = build_slice(merged, tables, spec, dates, dims).cache()
+    def sink(spec: SliceSpec) -> None:
+        part = frame.where((geoid == spec.geoid) & (dist == spec.distribution_type))
         tag = f"{spec.geoid}_{spec.distribution_type}"
-        n = sliced.count()
-        writers.write_csv_gzip(sliced, f"{out_root}/csv/{tag}", files=1)
+        writers.write_csv_gzip(part, f"{out_root}/csv/{tag}", files=1)
         writers.write_json_gzip(
-            shape_json_output(sliced, spec.distribution_type, clock=json_clock),
+            shape_json_output(part, spec.distribution_type, clock=json_clock),
             f"{out_root}/json/{tag}",
             files=1,
         )
-        return tag, n, sliced
 
     with ThreadPoolExecutor(max_workers=len(DEFAULT_SLICES)) as pool:
-        results = list(pool.map(build_and_sink, DEFAULT_SLICES))
-    return [sliced for _, _, sliced in results], {tag: n for tag, n, _ in results}
+        list(pool.map(sink, DEFAULT_SLICES))
+    return frame, counts
 
 
 def run_job(
@@ -656,24 +690,24 @@ def run_job(
 ) -> dict[str, int]:
     """The nightly job end to end (script/main.py:300-416) over the
     :data:`INPUT_TABLES` in ``tables``: the prep of
-    :func:`prepare_job`, the four slice chains with their gzip CSV and
-    JSON sinks, then the union of the slices overwritten into the
-    month-partitioned parquet sink under ``<out_root>/parquet``.
-    ``json_clock`` pins the JSON changelog timestamp. Returns the row
-    count of each slice by its tag.
+    :func:`prepare_job`, the one-pass slice frame with its per-slice
+    gzip CSV and JSON sinks (:func:`run_slices_concurrent`), then the
+    same cached frame overwritten into the month-partitioned parquet
+    sink under ``<out_root>/parquet``. ``json_clock`` pins the JSON
+    changelog timestamp. Returns the row count of each slice by its
+    tag.
 
     The dim checkpoints are RDD-level blocks that
     ``DataFrame.unpersist`` cannot release; a long-lived driver that
     runs many jobs should release them through the
     ``persistent_rdd_ids`` / ``release_new_persistent_rdds`` diff
     (the streaming/sinks.py pattern)."""
-    merged, tables, dims = prepare_job(tables, dates, out_root)
-    parts, counts = run_slices_concurrent(
+    merged, dims = prepare_job(tables, dates, out_root)
+    frame, counts = run_slices_concurrent(
         tables, merged, dates, out_root, dims, json_clock=json_clock
     )
-    writers.overwrite_partitions(
-        union_slices(parts, "ALL"), f"{out_root}/parquet", ["partitionMonth"]
-    )
-    for p in parts:
-        p.unpersist()
+    try:
+        writers.overwrite_partitions(frame, f"{out_root}/parquet", ["partitionMonth"])
+    finally:
+        frame.unpersist()
     return counts

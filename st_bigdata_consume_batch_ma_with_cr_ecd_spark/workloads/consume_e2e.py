@@ -3,8 +3,8 @@
 ``pipelines/consume_batch.py`` is pytest-golden-tested on hand-built
 fixtures, and ``pipeline_market_analytics`` oracle-checks an analogous
 chain over the star schema; this module hash-verifies and benchmarks
-the FAITHFUL pipeline end to end: 4 slices, the staged stage-0 merge,
-modify_data, and all three sinks (reference ``script/main.py:300-416``).
+the FAITHFUL pipeline end to end: 4 slices in one pass, the staged
+stage-0 merge, modify_data, and all three sinks (reference ``script/main.py:300-416``).
 
 ``derive_consume_inputs`` builds the eight reference-shaped input
 tables deterministically from the ``events`` testdata table (pure
@@ -16,9 +16,8 @@ derivation AND the full pipeline in DuckDB, so the driver's value hash
 covers the whole job including the storage roundtrip.
 
 Scale notes: identical to the pipeline module's — ONE scan+shuffle for
-the stage-0 merge, staged once and shared by all four slices; the
-slice loops multiply plan size, not shuffle count; both geo dims
-broadcast. The sinks are ``files=1`` gzip per the reference's contract
+the stage-0 merge, staged once; the four slices are one plan, so each
+stage shuffles once for all of them; both geo dims broadcast. The sinks are ``files=1`` gzip per the reference's contract
 (bounded repartition, never ``coalesce(1)``).
 """
 
@@ -499,11 +498,11 @@ def _e2e_oracle() -> str:
     oracle=_e2e_oracle(),
     doc="The faithful consume-batch job END TO END under one value hash: "
     "derived reference-shaped inputs, then the CLI's run_job: stage-0 "
-    "merge staged to a snappy-parquet table shared by all 4 slices, "
-    "texts staged bucketed by id, enrichment dims checkpointed (the "
-    "three prep jobs overlapped), stages 1-3 + modify_data per slice, "
-    "gzip CSV + gzip JSON sinks per slice, dynamic-partition-overwrite "
-    "parquet for the union, result read back FROM THE PARQUET SINK. "
+    "merge staged to a snappy-parquet table, enrichment dims "
+    "checkpointed (the prep jobs overlapped), stages 1-3 + modify_data "
+    "for all 4 slices in one cached pass, gzip CSV + gzip JSON sinks "
+    "per slice, dynamic-partition-overwrite parquet for all slices, "
+    "result read back FROM THE PARQUET SINK. "
     "Oracle replays the derivation and every stage in DuckDB "
     "(reference script/main.py:300-416).",
     tags=("bench", "eager"),

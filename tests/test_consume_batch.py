@@ -9,7 +9,8 @@ dedup, filtered-out distributions/estate types/geo prefixes,
 cleanupdataproblems threshold, visibility multiplicity + expiry +
 absence, fraud levels (pass / fail / missing / delete-op), nullable
 counters, price changes across the month boundary, geo lookup hit and
-miss, backslashed city names, non-integral room counts.
+miss (and an AT prefix present in the lookups), backslashed city names,
+non-integral room counts, a listing whose rows fall in two slices.
 """
 
 from __future__ import annotations
@@ -148,6 +149,12 @@ def changelog_rows():
         R("r20", "2024-07-06", "2024-07-06 13:00:00", "G13", cid="C13", geo="99912345", buy=1.0),
         # delete with no donor -> dropped by the inner as-of join
         R("r21", "2024-07-04", "2024-07-04 12:00:00", "G14", op="Delete", cid=None),
+        # C15 switches between BUY and RENT: rows in two slices, before
+        # and inside the month, two on one day; each slice keeps its own
+        R("r22", "2024-06-24", "2024-06-24 09:00:00", "G15", cid="C15", buy=250000.0),
+        R("r23", "2024-06-26", "2024-06-26 09:00:00", "G15", cid="C15", dist="RENT", rent=1200.0),
+        R("r24", "2024-07-08", "2024-07-08 09:00:00", "G15", cid="C15", dist="RENT", rent=1250.0),
+        R("r25", "2024-07-08", "2024-07-08 10:00:00", "G15", cid="C15", buy=260000.0),
     ]
 
 
@@ -174,6 +181,7 @@ def fixture_tables(spark):
             {"classifiedId": "C7", "aktivab": dt.date(2024, 5, 1), "aktivbis": dt.date(2024, 6, 15)},
             {"classifiedId": "C8", "aktivab": dt.date(2024, 6, 1), "aktivbis": dt.date(2024, 8, 1)},
             {"classifiedId": "C9", "aktivab": dt.date(2024, 6, 1), "aktivbis": dt.date(2024, 8, 1)},
+            {"classifiedId": "C15", "aktivab": dt.date(2024, 6, 1), "aktivbis": dt.date(2024, 8, 1)},
         ]
     )
     fraud_pd = pd.DataFrame(
@@ -186,6 +194,7 @@ def fixture_tables(spark):
             {"globalObjectKey": "C4", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 2},
             {"globalObjectKey": "C8", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 0},
             {"globalObjectKey": "C9", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 0},
+            {"globalObjectKey": "C15", "changeDate": dt.datetime(2024, 7, 2), "operation": "Insert", "fraud_level": 0},
         ]
     )
     contacts_pd = pd.DataFrame(
@@ -203,9 +212,20 @@ def fixture_tables(spark):
         ],
         dtype="object",
     )
-    bundeslaender_pd = pd.DataFrame([{"geoid": 10801, "bundesland": "BL1"}, {"geoid": 10399, "bundesland": "BLX"}])
+    # the AT rows' prefixes (10301, 10301543) are in the dims too: only
+    # the Germany gate keeps them from matching
+    bundeslaender_pd = pd.DataFrame(
+        [
+            {"geoid": 10801, "bundesland": "BL1"},
+            {"geoid": 10399, "bundesland": "BLX"},
+            {"geoid": 10301, "bundesland": "BL-AT"},
+        ]
+    )
     stadtlandkreise_pd = pd.DataFrame(
-        [{"geoid": 10801123, "landkreis": "LK1", "stadtkreis": True}]
+        [
+            {"geoid": 10801123, "landkreis": "LK1", "stadtkreis": True},
+            {"geoid": 10301543, "landkreis": "LK-AT", "stadtkreis": False},
+        ]
     )
 
     con = duckdb.connect()
@@ -275,7 +295,7 @@ def slice_oracle(geo_prefix: str, dist: str, price_col: str) -> str:
     ),
     day_latest AS (
         SELECT * EXCLUDE (v_rank) FROM (
-            SELECT m.*,
+            SELECT m.*, {geo_prefix} AS partitionGeoid,
                    row_number() OVER (
                        PARTITION BY classified_metaData_classifiedId,
                                     CAST(classified_metaData_changeDate AS DATE)
@@ -387,33 +407,52 @@ def canon(rows, cols):
 # ---------------------------------------------------------------- golden tests
 
 
-@pytest.mark.parametrize("spec", DEFAULT_SLICES, ids=lambda s: f"{s.geoid}-{s.distribution_type}")
-def test_slice_matches_independent_duckdb_formulation(spark, fixture_tables, spec):
-    con, t = fixture_tables
+def _stages_0_to_3(t, slices):
     merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
-    first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
+    first = basedata_first(merged, t["texts"], slices)
     base = basedata_enrich(first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES)
-    final = basedata_final(base, first, DATES, spec.price_amount_column)
+    return basedata_final(base, first, DATES, slices)
 
-    res = con.execute(slice_oracle(str(spec.geoid), spec.distribution_type, spec.price_amount_column))
-    d_cols = [d[0] for d in res.description]
-    d_rows = res.fetchall()
+
+def _oracle_rows(con, specs):
+    rows, cols = [], None
+    for spec in specs:
+        res = con.execute(slice_oracle(str(spec.geoid), spec.distribution_type, spec.price_amount_column))
+        cols = [d[0] for d in res.description]
+        rows += res.fetchall()
+    return rows, cols
+
+
+_SPEC_IDS = [f"{s.geoid}-{s.distribution_type}" for s in DEFAULT_SLICES]
+
+
+@pytest.mark.parametrize(
+    "specs", [(s,) for s in DEFAULT_SLICES] + [DEFAULT_SLICES], ids=_SPEC_IDS + ["all"]
+)
+def test_slice_matches_independent_duckdb_formulation(spark, fixture_tables, specs):
+    """One slice at a time, and all slices in one pass, which must equal
+    the union of the per-slice oracle results."""
+    con, t = fixture_tables
+    final = _stages_0_to_3(t, specs)
+    d_rows, d_cols = _oracle_rows(con, specs)
 
     s_cols = final.columns
     s_rows = [tuple(r) for r in final.collect()]
     assert sorted(map(str.lower, s_cols)) == sorted(map(str.lower, d_cols))
     assert canon(s_rows, [c.lower() for c in s_cols]) == canon(d_rows, [c.lower() for c in d_cols])
-    assert len(s_rows) > 0 or spec.geoid == 103  # DE slices must be non-empty
+    assert len(s_rows) > 0 or specs[0].geoid == 103  # DE slices must be non-empty
+
+
+def test_overlapping_slices_are_rejected(spark, fixture_tables):
+    # a row under geo prefix 108 would belong to both slices
+    _, t = fixture_tables
+    with pytest.raises(ValueError, match="overlap"):
+        basedata_first(t["changelog"], t["texts"], (SliceSpec(10, "BUY"), SliceSpec(108, "BUY")))
 
 
 def test_expected_listing_level_outcomes(spark, fixture_tables):
     con, t = fixture_tables
-    spec = SliceSpec(108, "BUY")
-    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
-    first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
-    base = basedata_enrich(first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES)
-    final = basedata_final(base, first, DATES, spec.price_amount_column)
-    rows = final.collect()
+    rows = _stages_0_to_3(t, (SliceSpec(108, "BUY"),)).collect()
     by_cid = {}
     for r in rows:
         by_cid.setdefault(r.classified_metaData_classifiedId, []).append(r)
@@ -443,12 +482,8 @@ def test_expected_listing_level_outcomes(spark, fixture_tables):
 
 def test_modify_data_output_shape(spark, fixture_tables):
     con, t = fixture_tables
-    spec = SliceSpec(108, "BUY")
-    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
-    first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
-    base = basedata_enrich(first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES)
-    final = basedata_final(base, first, DATES, spec.price_amount_column)
-    out = modify_data(final, 108, DATES.partition_month, t["bundeslaender"], t["stadtlandkreise"])
+    final = _stages_0_to_3(t, (SliceSpec(108, "BUY"), SliceSpec(103, "BUY")))
+    out = modify_data(final, DATES.partition_month, t["bundeslaender"], t["stadtlandkreise"])
 
     rows = {r.classified_metaData_classifiedId: r for r in out.collect()}
     r = rows["C1"]
@@ -458,10 +493,12 @@ def test_modify_data_output_shape(spark, fixture_tables):
     assert r.partitionGeoid == 108 and r.partitionMonth == "2024-07"
     assert "classified_geo_countrySpecific_de_iwtLegacyGeoID" not in out.columns
     assert not any(c.startswith("cleaned_") for c in out.columns)
-    # AT slice gets literal-null geo columns
-    at = modify_data(final.limit(1), 103, DATES.partition_month, t["bundeslaender"], t["stadtlandkreise"])
-    at_row = at.collect()
-    assert all(x.geo_state is None for x in at_row)
+    assert out.columns[-2:] == ["partitionGeoid", "partitionMonth"]
+    # a real AT row gets NULL geo columns although its prefixes are in
+    # both dims: the lookups apply to Germany only
+    at = rows["C8"]
+    assert at.partitionGeoid == 103
+    assert at.geo_state is None and at.geo_userDefined_immoWelt_county is None
 
 
 def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables):
@@ -487,21 +524,39 @@ def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables):
     assert first_shaped.subTypes in ({"house": "VILLA"}, {"apartment": "PENTHOUSE"})
 
 
-def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path):
+def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path, capsys):
     """tools/run_consume_batch.py end-to-end: same fixtures via parquet
     inputs, all three reference sinks written, and the parquet sink's
-    rows equal the lazy reference plan's."""
+    rows equal the lazy reference plan's. The change-log input has no
+    AT BUY rows, so one slice is empty. Output contract: every slice
+    commits one gzip file per text sink (the empty one too), its CSV
+    header is the parquet sink's column order and its CSV row count is
+    the one the CLI reports, and ``partitionGeoid`` is a required
+    (non-nullable) parquet column. Row order inside a file is not part
+    of the contract."""
+    import gzip
+    import json
     import sys
     from pathlib import Path
+
+    import pyarrow.parquet as pq
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     import run_consume_batch as cli
 
     _, t = fixture_tables
+    geo = F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID")
+    t = {
+        **t,
+        "changelog": t["changelog"].where(
+            ~(geo.startswith("103") & (F.col("cleaned_classified_distributionType") == "BUY"))
+        ),
+    }
     in_dir, out_dir = tmp_path / "in", tmp_path / "out"
     for name in cli.INPUT_TABLES:
         t[name].write.mode("overwrite").parquet(str(in_dir / name))
 
+    capsys.readouterr()
     rc = cli.main(
         [
             "--input-dir", str(in_dir),
@@ -511,28 +566,39 @@ def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path):
         ]
     )
     assert rc == 0
+    rows_per_slice = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["rows_per_slice"]
+    assert rows_per_slice["103_BUY"] == 0
+    assert all(n > 0 for tag, n in rows_per_slice.items() if tag != "103_BUY")
 
     expected = consume_batch(
         t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
         t["bundeslaender"], t["stadtlandkreise"], DATES,
     )
-    got = spark.read.parquet(str(out_dir / "parquet")).select(*expected.columns)
+    parquet = spark.read.parquet(str(out_dir / "parquet"))
+    assert parquet.columns == expected.columns
     canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
     want = canon(expected)
     assert len(want) > 0
-    assert canon(got) == want
-    # one gzip file per slice for both text sinks that had rows
-    for kind in ("csv", "json"):
-        slices = list((out_dir / kind).iterdir())
-        assert len(slices) == 4
-        assert all(any(p.name.endswith(".gz") for p in s.iterdir()) for s in slices)
+    assert canon(parquet) == want
+    for f in (out_dir / "parquet").rglob("*.parquet"):
+        assert not pq.read_schema(f).field("partitionGeoid").nullable
+
+    for spec in DEFAULT_SLICES:
+        tag = f"{spec.geoid}_{spec.distribution_type}"
+        for kind in ("csv", "json"):
+            sink = out_dir / kind / tag
+            assert (sink / "_SUCCESS").exists()
+            assert len([p for p in sink.iterdir() if p.name.endswith(".gz")]) == 1
+        (csv_gz,) = (out_dir / "csv" / tag).glob("*.gz")
+        with gzip.open(csv_gz, "rt") as fh:
+            header, *data = fh.read().splitlines()
+        assert header.split(",") == parquet.columns
+        assert len(data) == rows_per_slice[tag]
 
 
-def test_e2e_slices_reuse_cached_merge(spark, sf_dir, tmp_path):
-    """Stage 0 is computed once and REUSED by every slice (reference
-    C1): a slice chain built on run_job's prep must scan the
-    ``_stage0_staging`` parquet table and must not re-plan any part of
-    the merge (its union, as-of join or change-log scan)."""
+@pytest.fixture(scope="module")
+def prepared_e2e(spark, sf_dir, tmp_path_factory):
+    """``prepare_job`` run on the sf-derived e2e inputs."""
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
         prepare_job,
     )
@@ -541,24 +607,58 @@ def test_e2e_slices_reuse_cached_merge(spark, sf_dir, tmp_path):
         derive_consume_inputs,
     )
 
+    out = tmp_path_factory.mktemp("e2e_prep")
     t = derive_consume_inputs(spark, sf_dir)
-    merged, tables, _ = prepare_job(t, _DATES, str(tmp_path))
-    assert any((tmp_path / "_stage0_staging").glob("*.parquet"))
-    first = basedata_first(merged, tables["texts"], 108, "BUY")
-    # every file the slice reads is one of the two staging tables
+    merged, dims = prepare_job(t, _DATES, str(out))
+    return t, merged, dims, out, _DATES
+
+
+def test_e2e_slices_reuse_cached_merge(spark, prepared_e2e):
+    """Stage 0 is computed once and REUSED by the slices (reference
+    C1): stage 1 built on run_job's prep must scan the
+    ``_stage0_staging`` parquet table and must not re-plan any part of
+    the merge (its union, as-of join or change-log scan)."""
+    t, merged, _, out, _ = prepared_e2e
+    assert any((out / "_stage0_staging").glob("*.parquet"))
+    first = basedata_first(merged, t["texts"], (SliceSpec(108, "BUY"),))
+    # every file stage 1 reads is the staged stage 0 or the texts input
     files = first.inputFiles()
+    texts = set(t["texts"].inputFiles())
     assert any("/_stage0_staging/" in f for f in files)
-    assert all("/_stage0_staging/" in f or "/_texts_staging/" in f for f in files)
+    assert all("/_stage0_staging/" in f or f in texts for f in files)
     plan = first._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
     assert "InMemoryTableScan" not in plan
 
 
+def test_one_pass_frame_scans_stage0_as_often_as_one_slice(spark, prepared_e2e):
+    """All four slices are one plan: its executed plan scans the staged
+    stage 0 and the texts input exactly as often as a single slice's
+    plan, and shuffles no more often. A per-slice union would repeat
+    them four times."""
+    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
+        build_slices,
+    )
+
+    t, merged, dims, _, dates = prepared_e2e
+    # the directory name of the texts input, as the plan prints it
+    texts_path = t["texts"].inputFiles()[0].rsplit("/", 2)[-2]
+
+    def plan(slices):
+        df = build_slices(merged, t, slices, dates, dims)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    one, every = plan(DEFAULT_SLICES[:1]), plan(DEFAULT_SLICES)
+    assert one.count("_stage0_staging") > 0 and one.count(texts_path) > 0
+    assert every.count("_stage0_staging") == one.count("_stage0_staging")
+    assert every.count(texts_path) == one.count(texts_path)
+    assert every.count("Exchange") <= one.count("Exchange")
+
+
 def test_enrich_prepared_dims_equals_inline(spark, fixture_tables):
-    """§2.4: the 4-slice loop shares ONE set of slice-independent
-    enrichment inputs (prepare_enrich_dims) instead of re-deriving the
-    visibility filter / fraud argmax / counter summaries per slice.
-    The prepared path — including the materialized (localCheckpoint)
+    """§2.4: the job builds ONE set of slice-independent enrichment
+    inputs (prepare_enrich_dims) ahead of the slice plan. The prepared
+    path — including the materialized (localCheckpoint)
     form prepare_job builds — must be row-identical to the inline
     default for every slice."""
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
@@ -573,7 +673,7 @@ def test_enrich_prepared_dims_equals_inline(spark, fixture_tables):
     ckpt = {k: v.localCheckpoint(eager=True) for k, v in dims.items()}
     canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
     for spec in DEFAULT_SLICES:
-        first = basedata_first(merged, t["texts"], spec.geoid, spec.distribution_type)
+        first = basedata_first(merged, t["texts"], (spec,))
         inline = basedata_enrich(
             first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES
         )

@@ -4,6 +4,10 @@ can't isolate."""
 
 from __future__ import annotations
 
+from collections import Counter
+
+import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -157,6 +161,37 @@ def test_not_in_empty_subquery_keeps_everything(spark):
     left = spark.createDataFrame([(1,), (2,)], "k int")
     right = spark.createDataFrame([], "k int")
     assert rows_set(not_in_anti_join(left, right, "k")) == {(1,), (2,)}
+
+
+def test_not_in_by_group_matches_correlated_duckdb(spark):
+    # exactly one group, ('b', 1), has a NULL key on the right: it alone
+    # is emptied. ('c', 1) and the NULL groups have no right rows, so
+    # they keep every row, NULL x included (`x NOT IN ()` is true).
+    left_rows = [
+        (g, h, x)
+        for g, h in [("a", 1), ("a", 2), ("b", 1), ("c", 1), (None, 1)]
+        for x in (1, 2, None)
+    ]
+    right_rows = [("a", 1, 2), ("a", 2, 1), ("a", 2, 3), ("b", 1, 2), ("b", 1, None), (None, 1, 1)]
+    left = spark.createDataFrame(left_rows, "g string, h int, x int")
+    right = spark.createDataFrame(right_rows, "g string, h int, k int")
+
+    out = not_in_anti_join(left, right, "x", "k", by=["g", "h"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+    con = duckdb.connect()
+    con.register("l", pd.DataFrame(left_rows, columns=["g", "h", "x"], dtype="object"))
+    con.register("r", pd.DataFrame(right_rows, columns=["g", "h", "k"], dtype="object"))
+    want = con.execute(
+        "SELECT g, CAST(h AS INT), CAST(x AS INT) FROM l "
+        "WHERE x NOT IN (SELECT k FROM r WHERE r.g = l.g AND r.h = l.h)"
+    ).fetchall()
+    assert out.columns == ["g", "h", "x"]
+    got = Counter(map(tuple, out.collect()))
+    assert got == Counter(map(tuple, want))
+    assert ("c", 1, None) in got and not any(g == "b" for g, _, _ in got)
 
 
 # ---------------------------------------------------------------- set ops

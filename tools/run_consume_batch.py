@@ -1,7 +1,8 @@
 """Job driver CLI — the open-Spark equivalent of the reference's Glue
 entry point (``script/main.py:196-416``): resolve the incremental
-window, run the 4-slice pipeline, and write the reference's three
-sinks (gzip JSON nested, gzip CSV flat, month-partitioned parquet).
+window, run the pipeline's four country/distribution slices as one
+pass, and write the reference's three sinks (gzip JSON nested and gzip
+CSV flat, one file per slice; month-partitioned parquet for all).
 
     python tools/run_consume_batch.py \
         --input-dir /data/inputs --output-dir /data/out \
@@ -12,7 +13,7 @@ visibility, fraud, contacts, visits, bundeslaender, stadtlandkreise``
 (schemas: see pipelines.consume_batch docstrings / tests). ``--days-ago
 full_refresh`` rewinds to the data epoch like the reference's flag.
 The output dir gets ``csv/<slice>``, ``json/<slice>`` and ``parquet/``,
-plus the job's staging tables ``_stage0_staging`` and ``_texts_staging``.
+plus the job's stage-0 staging table ``_stage0_staging``.
 """
 
 from __future__ import annotations

@@ -188,8 +188,8 @@ def probes(
     )
 
     # consume-batch nightly job end to end through run_job, the path
-    # the CLI runs: staged prep, the 4 concurrent slice chains with
-    # their gzip CSV/JSON sinks, and the parquet sink of the union
+    # the CLI runs: staged prep, the one-pass frame of all 4 slices
+    # with their gzip CSV/JSON sinks, and the parquet sink
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
         run_job,
     )
