@@ -15,7 +15,8 @@ Stage map (reference citations):
   version + text join); keeps the rows of the requested slices and tags
   each with its slice (:data:`SLICE_KEY`)
 - ``basedata_enrich``    — 2-basedata_df_query.sql (visibility inner
-  join + fraud argmax + counter sums, 3 left joins)
+  join + fraud argmax + counter sums, 3 left joins), inline in the
+  slice plan as in the reference's one query
 - ``basedata_final``     — 3-basedata_df_final_query.sql (stale-id NOT
   IN elimination, fraud filter, price-change history union)
 - ``modify_data``        — script/main.py:157-193 (rooms rounding, city
@@ -28,9 +29,9 @@ Stage map (reference citations):
 - ``consume_batch``      — the reference's 4-slice country/distribution
   loop with UNION ALL accumulation (script/main.py:300-368), as one
   lazy pass over all four slices
-- ``run_job``            — the nightly job run end to end: staged prep,
-  the one-pass slice frame cached and sunk to per-slice CSV/JSON, the
-  parquet sink (script/main.py:300-416)
+- ``run_job``            — the nightly job run end to end: stage 0
+  staged to parquet, the one-pass slice frame cached and sunk to
+  per-slice CSV/JSON, the parquet sink (script/main.py:300-416)
 
 The reference runs stages 1-3 once per slice. Here the slice key is one
 more column in every window partition, group-by and join key of those
@@ -63,12 +64,7 @@ from ..functions.nesting import nest_columns
 from ..functions.whenchain import when_chain
 from ..operators.asof import asof_join
 from ..operators.dedup import top_n_per_group
-from ..operators.joins import (
-    broadcast_lookup_join,
-    join_summary,
-    not_in_anti_join,
-    summarize_for_join,
-)
+from ..operators.joins import broadcast_lookup_join, join_preaggregated, not_in_anti_join
 from ..operators.setops import union_slices
 from ..sinks import writers
 
@@ -89,7 +85,8 @@ GEO_DROP_COLUMNS = (
 
 _CORE = ("id", "partitionChangeDate", "changeDate", "globalObjectKey", "operation")
 
-#: The job's eight input tables, in :func:`consume_batch`'s argument order.
+#: The keys of the ``tables`` dict that :func:`consume_batch` and
+#: :func:`run_job` take: the job's eight input tables.
 INPUT_TABLES = (
     "changelog",
     "texts",
@@ -269,55 +266,25 @@ def basedata_first(
     return latest.join(texts.select("id", *text_cols), "id", "left")
 
 
-#: 2-basedata_df_query.sql:27-63 — the counter sums and their COALESCE
-#: defaults, factored so the once-per-job summaries
-#: (:func:`prepare_enrich_dims`) and their joins
-#: (:func:`basedata_enrich`) can never drift apart. Functions, not
-#: module constants: Column construction needs an active SparkContext.
-_CONTACT_NAMES = (
-    "userDefined_immoWelt_contact_requests",
-    "userDefined_immoWelt_iw_contact_requests",
-    "userDefined_immoWelt_in_contact_requests",
-)
-_VISIT_NAMES = (
-    "userDefined_immoWelt_expose_visits",
-    "userDefined_immoWelt_iw_expose_visits",
-    "userDefined_immoWelt_in_expose_visits",
-)
-_CONTACT_FILL = {name: 0 for name in _CONTACT_NAMES}
-_VISIT_FILL = {name: 0 for name in _VISIT_NAMES}
-
-
-def _contact_aggs():
-    return {
-        name: F.sum(F.coalesce(src, F.lit(0)))
-        for name, src in zip(_CONTACT_NAMES, ("c1", "c2", "c3"))
-    }
-
-
-def _visit_aggs():
-    return {
-        name: F.sum(F.coalesce(src, F.lit(0)))
-        for name, src in zip(_VISIT_NAMES, ("v1", "v2", "v3"))
-    }
-
-
-def prepare_enrich_dims(
+def basedata_enrich(
+    first: DataFrame,
     visibility: DataFrame,
     fraud_events: DataFrame,
     contacts: DataFrame,
     visits: DataFrame,
     dates: JobDates,
-) -> dict[str, DataFrame]:
-    """The slice-INDEPENDENT inputs of ``basedata_enrich``: the
-    active-visibility key set, the fraud argmax, and the contact/visit
-    counter summaries do not depend on (geoid, distribution). Factored
-    out so :func:`prepare_job` can materialize them alongside stage 0
-    (§2.4)."""
+) -> DataFrame:
+    """2-basedata_df_query.sql — active-visibility inner join (kept
+    multiplicity-preserving), latest fraud level argmax, contact/visit
+    counter sums, three left joins."""
+    cid = "classified_metaData_classifiedId"
+
     active = visibility.where(
         (F.col("aktivbis") >= F.to_date(F.lit(dates.first_day_current_month)))
         & (F.col("aktivab") < F.to_date(F.lit(dates.partition_date)))
     ).select("classifiedId")
+    oc = first.join(active, first[cid] == active["classifiedId"]).drop("classifiedId")
+
     fraud = (
         fraud_events.where(F.col("operation") != "Delete")
         .groupBy("globalObjectKey")
@@ -330,71 +297,31 @@ def prepare_enrich_dims(
             ).alias("fraudLevelId")
         )
     )
-    contacts_sum = summarize_for_join(
-        contacts.select(
-            "classifiedId",
-            F.col("emailContactRequest").alias("c1"),
-            F.col("emailContactRequestIW").alias("c2"),
-            F.col("emailContactRequestIN").alias("c3"),
-        ),
-        ["classifiedId"],
-        _contact_aggs(),
-    )
-    visits_sum = summarize_for_join(
-        visits.select(
-            "classifiedId",
-            F.col("exposeVisits").alias("v1"),
-            F.col("exposeVisitsIW").alias("v2"),
-            F.col("exposeVisitsIN").alias("v3"),
-        ),
-        ["classifiedId"],
-        _visit_aggs(),
-    )
-    return {
-        "active": active,
-        "fraud": fraud,
-        "contacts": contacts_sum,
-        "visits": visits_sum,
-    }
-
-
-def basedata_enrich(
-    first: DataFrame,
-    visibility: DataFrame,
-    fraud_events: DataFrame,
-    contacts: DataFrame,
-    visits: DataFrame,
-    dates: JobDates,
-    *,
-    dims: dict[str, DataFrame] | None = None,
-) -> DataFrame:
-    """2-basedata_df_query.sql — active-visibility inner join (kept
-    multiplicity-preserving), latest fraud level argmax, contact/visit
-    counter sums, three left joins.
-
-    ``dims`` (optional) supplies the slice-independent inputs prebuilt
-    by :func:`prepare_enrich_dims`, e.g. materialized ahead of the
-    slice plan; the default path builds them inline and is
-    row-identical by construction (same expressions, same joins)."""
-    cid = "classified_metaData_classifiedId"
-    if dims is None:
-        dims = prepare_enrich_dims(visibility, fraud_events, contacts, visits, dates)
-
-    active = dims["active"]
-    oc = first.join(active, first[cid] == active["classifiedId"]).drop("classifiedId")
-
-    fraud = dims["fraud"]
     out = oc.join(fraud, oc[cid] == fraud["globalObjectKey"], "left").drop(
         fraud["globalObjectKey"]
     )
 
-    out = join_summary(
-        out.withColumn("classifiedId", F.col(cid)),
-        dims["contacts"],
-        ["classifiedId"],
-        fill=_CONTACT_FILL,
-    )
-    out = join_summary(out, dims["visits"], ["classifiedId"], fill=_VISIT_FILL)
+    # reference lines 27-63: COALESCE(SUM(COALESCE(x, 0)), 0) per counter
+    out = out.withColumn("classifiedId", F.col(cid))
+    for detail, counters in (
+        (contacts, {
+            "userDefined_immoWelt_contact_requests": "emailContactRequest",
+            "userDefined_immoWelt_iw_contact_requests": "emailContactRequestIW",
+            "userDefined_immoWelt_in_contact_requests": "emailContactRequestIN",
+        }),
+        (visits, {
+            "userDefined_immoWelt_expose_visits": "exposeVisits",
+            "userDefined_immoWelt_iw_expose_visits": "exposeVisitsIW",
+            "userDefined_immoWelt_in_expose_visits": "exposeVisitsIN",
+        }),
+    ):
+        out = join_preaggregated(
+            out,
+            detail,
+            ["classifiedId"],
+            {name: F.sum(F.coalesce(F.col(src), F.lit(0))) for name, src in counters.items()},
+            fill=dict.fromkeys(counters, 0),
+        )
     return out.drop("classifiedId")
 
 
@@ -555,17 +482,15 @@ def build_slices(
     tables: dict[str, DataFrame],
     slices: Sequence[SliceSpec],
     dates: JobDates,
-    dims: dict[str, DataFrame],
 ) -> DataFrame:
     """Stages 1-3 + ``modify_data`` for ``slices`` of the
-    country/distribution matrix as one frame, built on the shared
-    stage-0 ``merged`` and the shared enrichment ``dims``. Each row
-    carries its slice in ``partitionGeoid`` and
+    country/distribution matrix as one frame, built on the stage-0
+    ``merged``. Each row carries its slice in ``partitionGeoid`` and
     ``classified_distributionType``."""
     first = basedata_first(merged, tables["texts"], slices)
     base = basedata_enrich(
         first, tables["visibility"], tables["fraud"], tables["contacts"],
-        tables["visits"], dates, dims=dims,
+        tables["visits"], dates,
     )
     final = basedata_final(base, first, dates, slices)
     return modify_data(
@@ -573,72 +498,32 @@ def build_slices(
     )
 
 
-def consume_batch(
-    changelog: DataFrame,
-    texts: DataFrame,
-    visibility: DataFrame,
-    fraud_events: DataFrame,
-    contacts: DataFrame,
-    visits: DataFrame,
-    bundeslaender: DataFrame,
-    stadtlandkreise: DataFrame,
-    dates: JobDates,
-) -> DataFrame:
-    """The full job as one lazy plan (script/main.py:300-368): stage 0,
-    then stages 1-3 + modify_data over all :data:`DEFAULT_SLICES` in
-    one pass; its rows are the UNION ALL of the reference's per-slice
-    results.
+def consume_batch(tables: dict[str, DataFrame], dates: JobDates) -> DataFrame:
+    """The full job as one lazy plan (script/main.py:300-368) over the
+    :data:`INPUT_TABLES` in ``tables``: stage 0, then stages 1-3 +
+    modify_data over all :data:`DEFAULT_SLICES` in one pass; its rows
+    are the UNION ALL of the reference's per-slice results.
 
     Nothing is staged, cached or written, so this is the reference plan
     that tests and plan audits compare against; :func:`run_job` builds
-    the same frame on staged prep."""
-    tables = dict(
-        zip(
-            INPUT_TABLES,
-            (changelog, texts, visibility, fraud_events, contacts, visits,
-             bundeslaender, stadtlandkreise),
-        )
-    )
-    merged = merge_delete(filter_changelog(changelog), dates.first_day_past)
-    dims = prepare_enrich_dims(visibility, fraud_events, contacts, visits, dates)
-    return build_slices(merged, tables, DEFAULT_SLICES, dates, dims)
+    the same frame on the staged stage 0."""
+    merged = merge_delete(filter_changelog(tables["changelog"]), dates.first_day_past)
+    return build_slices(merged, tables, DEFAULT_SLICES, dates)
 
 
-def prepare_job(
-    tables: dict[str, DataFrame], dates: JobDates, out_root: str
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """The job's prep jobs, run concurrently from one driver pool
-    because none reads another's output (§2.6 "overlap independent
-    jobs"). Returns the staged stage-0 frame and the checkpointed
-    enrichment dims.
-
-    - Stage 0 is written once to ``<out_root>/_stage0_staging`` and the
-      slice frame scans the files. A parquet staging table has no
-      cache-residency limit and gets columnar scans with pruning; the
-      block-manager cache it replaced lost at every measured scale
-      >= sf0.1 (6.9 s vs 11.8 s at sf0.1, 86.5 s vs 230.8 s at 64x,
-      SCALE.md).
-    - The four :func:`prepare_enrich_dims` frames are checkpointed so
-      their shuffles overlap the stage-0 write instead of running after
-      it inside the slice plan. The summaries are key-count-sized;
-      ``active`` is the filtered visibility projection, never
-      change-log-sized.
-    """
-    spark = tables["changelog"].sparkSession
+def prepare_job(tables: dict[str, DataFrame], dates: JobDates, out_root: str) -> DataFrame:
+    """Stage 0 written once to ``<out_root>/_stage0_staging`` and read
+    back, so the slice frame scans the files instead of re-planning the
+    merge. A parquet staging table has no cache-residency limit and gets
+    columnar scans with pruning; the block-manager cache it replaced
+    lost at every measured scale >= sf0.1 (6.9 s vs 11.8 s at sf0.1,
+    86.5 s vs 230.8 s at 64x, SCALE.md). Stage 2's small side inputs
+    are not staged: they stay in the slice plan, as in the reference's
+    one query."""
     merged = merge_delete(filter_changelog(tables["changelog"]), dates.first_day_past)
     staging = f"{out_root}/_stage0_staging"
-
-    def stage0() -> DataFrame:
-        merged.write.mode("overwrite").parquet(staging)
-        return spark.read.parquet(staging)
-
-    raw_dims = prepare_enrich_dims(
-        tables["visibility"], tables["fraud"], tables["contacts"], tables["visits"], dates
-    )
-    with ThreadPoolExecutor(max_workers=1 + len(raw_dims)) as pool:
-        f_stage0 = pool.submit(stage0)
-        f_dims = {k: pool.submit(v.localCheckpoint, eager=True) for k, v in raw_dims.items()}
-        return f_stage0.result(), {k: f.result() for k, f in f_dims.items()}
+    merged.write.mode("overwrite").parquet(staging)
+    return tables["changelog"].sparkSession.read.parquet(staging)
 
 
 def run_slices_concurrent(
@@ -646,21 +531,20 @@ def run_slices_concurrent(
     merged: DataFrame,
     dates: JobDates,
     out_root: str,
-    dims: dict[str, DataFrame],
     *,
     json_clock: str | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Build all :data:`DEFAULT_SLICES` as one frame with
-    :func:`build_slices` on the prepared ``merged`` and ``dims``, cache
-    it, count every slice with one grouped count, and sink each slice
-    to single-file gzip CSV + gzip JSON from a filter of the cache. The
+    :func:`build_slices` on the staged ``merged``, cache it, count
+    every slice with one grouped count, and sink each slice to
+    single-file gzip CSV + gzip JSON from a filter of the cache. The
     eight single-task gzip writes run from a driver thread pool: Spark
     schedules jobs from several threads onto one session, so they
     overlap instead of running in the reference's serial loop.
 
     Returns the cached frame, which the caller sinks and unpersists,
     and the row count of each slice by its tag (0 for an empty slice)."""
-    frame = build_slices(merged, tables, DEFAULT_SLICES, dates, dims).cache()
+    frame = build_slices(merged, tables, DEFAULT_SLICES, dates).cache()
     geoid, dist = F.col("partitionGeoid"), F.col("classified_distributionType")
     counts = {f"{spec.geoid}_{spec.distribution_type}": 0 for spec in DEFAULT_SLICES}
     for g, d, n in frame.groupBy(geoid, dist).count().collect():
@@ -689,23 +573,16 @@ def run_job(
     json_clock: str | None = None,
 ) -> dict[str, int]:
     """The nightly job end to end (script/main.py:300-416) over the
-    :data:`INPUT_TABLES` in ``tables``: the prep of
+    :data:`INPUT_TABLES` in ``tables``: the staged stage 0 of
     :func:`prepare_job`, the one-pass slice frame with its per-slice
     gzip CSV and JSON sinks (:func:`run_slices_concurrent`), then the
     same cached frame overwritten into the month-partitioned parquet
     sink under ``<out_root>/parquet``. ``json_clock`` pins the JSON
     changelog timestamp. Returns the row count of each slice by its
-    tag.
-
-    The dim checkpoints are RDD-level blocks that
-    ``DataFrame.unpersist`` cannot release; a long-lived driver that
-    runs many jobs should release them through the
-    ``persistent_rdd_ids`` / ``release_new_persistent_rdds`` diff
-    (the streaming/sinks.py pattern)."""
-    merged, dims = prepare_job(tables, dates, out_root)
-    frame, counts = run_slices_concurrent(
-        tables, merged, dates, out_root, dims, json_clock=json_clock
-    )
+    tag. It unpersists the frame it cached, so it leaves no blocks
+    behind."""
+    merged = prepare_job(tables, dates, out_root)
+    frame, counts = run_slices_concurrent(tables, merged, dates, out_root, json_clock=json_clock)
     try:
         writers.overwrite_partitions(frame, f"{out_root}/parquet", ["partitionMonth"])
     finally:

@@ -3,8 +3,11 @@
 ``pipelines/consume_batch.py`` is pytest-golden-tested on hand-built
 fixtures, and ``pipeline_market_analytics`` oracle-checks an analogous
 chain over the star schema; this module hash-verifies and benchmarks
-the FAITHFUL pipeline end to end: 4 slices in one pass, the staged
-stage-0 merge, modify_data, and all three sinks (reference ``script/main.py:300-416``).
+the FAITHFUL pipeline end to end: the staged stage-0 merge, then
+stages 1-3 and modify_data for the 4 slices in one pass (stage 2's
+visibility, fraud and counter inputs built inside it, as in the
+reference's one query), and all three sinks (reference
+``script/main.py:300-416``).
 
 ``derive_consume_inputs`` builds the eight reference-shaped input
 tables deterministically from the ``events`` testdata table (pure
@@ -498,9 +501,9 @@ def _e2e_oracle() -> str:
     oracle=_e2e_oracle(),
     doc="The faithful consume-batch job END TO END under one value hash: "
     "derived reference-shaped inputs, then the CLI's run_job: stage-0 "
-    "merge staged to a snappy-parquet table, enrichment dims "
-    "checkpointed (the prep jobs overlapped), stages 1-3 + modify_data "
-    "for all 4 slices in one cached pass, gzip CSV + gzip JSON sinks "
+    "merge staged to a snappy-parquet table, stages 1-3 + modify_data "
+    "for all 4 slices in one cached pass (the enrichment inputs built "
+    "inside it), gzip CSV + gzip JSON sinks "
     "per slice, dynamic-partition-overwrite parquet for all slices, "
     "result read back FROM THE PARQUET SINK. "
     "Oracle replays the derivation and every stage in DuckDB "

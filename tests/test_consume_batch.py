@@ -33,6 +33,7 @@ from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch impor
     filter_changelog,
     merge_delete,
     modify_data,
+    run_job,
     shape_json_output,
 )
 
@@ -503,10 +504,7 @@ def test_modify_data_output_shape(spark, fixture_tables):
 
 def test_consume_batch_end_to_end_and_json_shape(spark, fixture_tables):
     con, t = fixture_tables
-    union = consume_batch(
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    )
+    union = consume_batch(t, DATES)
     rows = union.collect()
     assert len(rows) > 0
     assert {r.partitionGeoid for r in rows} <= {108, 103}
@@ -570,10 +568,7 @@ def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path, caps
     assert rows_per_slice["103_BUY"] == 0
     assert all(n > 0 for tag, n in rows_per_slice.items() if tag != "103_BUY")
 
-    expected = consume_batch(
-        t["changelog"], t["texts"], t["visibility"], t["fraud"], t["contacts"], t["visits"],
-        t["bundeslaender"], t["stadtlandkreise"], DATES,
-    )
+    expected = consume_batch(t, DATES)
     parquet = spark.read.parquet(str(out_dir / "parquet"))
     assert parquet.columns == expected.columns
     canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
@@ -596,6 +591,16 @@ def test_cli_driver_writes_all_three_sinks(spark, fixture_tables, tmp_path, caps
         assert len(data) == rows_per_slice[tag]
 
 
+def test_run_job_leaves_no_persistent_rdds(spark, fixture_tables, tmp_path):
+    """A driver that runs the job again and again must not pile up
+    blocks: run_job leaves the persistent-RDD registry as it found it."""
+    _, t = fixture_tables
+    jsc = spark.sparkContext._jsc
+    before = len(jsc.getPersistentRDDs())
+    run_job(t, DATES, str(tmp_path / "out"))
+    assert len(jsc.getPersistentRDDs()) == before
+
+
 @pytest.fixture(scope="module")
 def prepared_e2e(spark, sf_dir, tmp_path_factory):
     """``prepare_job`` run on the sf-derived e2e inputs."""
@@ -609,8 +614,8 @@ def prepared_e2e(spark, sf_dir, tmp_path_factory):
 
     out = tmp_path_factory.mktemp("e2e_prep")
     t = derive_consume_inputs(spark, sf_dir)
-    merged, dims = prepare_job(t, _DATES, str(out))
-    return t, merged, dims, out, _DATES
+    merged = prepare_job(t, _DATES, str(out))
+    return t, merged, out, _DATES
 
 
 def test_e2e_slices_reuse_cached_merge(spark, prepared_e2e):
@@ -618,7 +623,7 @@ def test_e2e_slices_reuse_cached_merge(spark, prepared_e2e):
     C1): stage 1 built on run_job's prep must scan the
     ``_stage0_staging`` parquet table and must not re-plan any part of
     the merge (its union, as-of join or change-log scan)."""
-    t, merged, _, out, _ = prepared_e2e
+    t, merged, out, _ = prepared_e2e
     assert any((out / "_stage0_staging").glob("*.parquet"))
     first = basedata_first(merged, t["texts"], (SliceSpec(108, "BUY"),))
     # every file stage 1 reads is the staged stage 0 or the texts input
@@ -640,12 +645,12 @@ def test_one_pass_frame_scans_stage0_as_often_as_one_slice(spark, prepared_e2e):
         build_slices,
     )
 
-    t, merged, dims, _, dates = prepared_e2e
+    t, merged, _, dates = prepared_e2e
     # the directory name of the texts input, as the plan prints it
     texts_path = t["texts"].inputFiles()[0].rsplit("/", 2)[-2]
 
     def plan(slices):
-        df = build_slices(merged, t, slices, dates, dims)
+        df = build_slices(merged, t, slices, dates)
         return df._jdf.queryExecution().executedPlan().toString()
 
     one, every = plan(DEFAULT_SLICES[:1]), plan(DEFAULT_SLICES)
@@ -653,33 +658,3 @@ def test_one_pass_frame_scans_stage0_as_often_as_one_slice(spark, prepared_e2e):
     assert every.count("_stage0_staging") == one.count("_stage0_staging")
     assert every.count(texts_path) == one.count(texts_path)
     assert every.count("Exchange") <= one.count("Exchange")
-
-
-def test_enrich_prepared_dims_equals_inline(spark, fixture_tables):
-    """§2.4: the job builds ONE set of slice-independent enrichment
-    inputs (prepare_enrich_dims) ahead of the slice plan. The prepared
-    path — including the materialized (localCheckpoint)
-    form prepare_job builds — must be row-identical to the inline
-    default for every slice."""
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
-        prepare_enrich_dims,
-    )
-
-    _, t = fixture_tables
-    merged = merge_delete(filter_changelog(t["changelog"]), DATES.first_day_past)
-    dims = prepare_enrich_dims(
-        t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES
-    )
-    ckpt = {k: v.localCheckpoint(eager=True) for k, v in dims.items()}
-    canon = lambda df: sorted(map(str, (tuple(r) for r in df.collect())))  # noqa: E731
-    for spec in DEFAULT_SLICES:
-        first = basedata_first(merged, t["texts"], (spec,))
-        inline = basedata_enrich(
-            first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES
-        )
-        prepared = basedata_enrich(
-            first, t["visibility"], t["fraud"], t["contacts"], t["visits"], DATES,
-            dims=ckpt,
-        )
-        assert prepared.columns == inline.columns
-        assert canon(prepared) == canon(inline)

@@ -163,6 +163,18 @@ def test_not_in_empty_subquery_keeps_everything(spark):
     assert rows_set(not_in_anti_join(left, right, "k")) == {(1,), (2,)}
 
 
+def test_not_in_empty_subquery_keeps_null_left_keys(spark):
+    # `NULL NOT IN (<empty>)` is TRUE: the NULL left row stays
+    left = spark.createDataFrame([(1,), (None,)], "k int")
+    right = spark.createDataFrame([], "k int")
+    want = duckdb.sql(
+        "SELECT k FROM (VALUES (1), (NULL)) l(k) "
+        "WHERE k NOT IN (SELECT k FROM (VALUES (1)) r(k) WHERE false)"
+    ).fetchall()
+    assert set(want) == {(1,), (None,)}
+    assert rows_set(not_in_anti_join(left, right, "k")) == set(want)
+
+
 def test_not_in_by_group_matches_correlated_duckdb(spark):
     # exactly one group, ('b', 1), has a NULL key on the right: it alone
     # is emptied. ('c', 1) and the NULL groups have no right rows, so

@@ -188,7 +188,7 @@ def probes(
     )
 
     # consume-batch nightly job end to end through run_job, the path
-    # the CLI runs: staged prep, the one-pass frame of all 4 slices
+    # the CLI runs: stage 0 staged, the one-pass frame of all 4 slices
     # with their gzip CSV/JSON sinks, and the parquet sink
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.pipelines.consume_batch import (
         run_job,
@@ -1336,13 +1336,7 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         ev_m = amplify(ev, mult, ["event_id", "user_id"])
         t = derive_consume_inputs(spark, sf_dir, events=ev_m)
-        plan = final_plan(
-            consume_batch(
-                t["changelog"], t["texts"], t["visibility"], t["fraud"],
-                t["contacts"], t["visits"], t["bundeslaender"], t["stadtlandkreise"],
-                _DATES,
-            )
-        )
+        plan = final_plan(consume_batch(t, _DATES))
         assert "CartesianProduct" not in plan, "e2e grew an unguarded cross join"
         assert "BroadcastNestedLoopJoin" not in plan, (
             "e2e grew a nested-loop join — a non-equi condition stopped "
