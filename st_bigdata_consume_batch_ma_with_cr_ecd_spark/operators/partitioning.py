@@ -13,7 +13,9 @@ parallelism. At production scale (100 TB => tens of thousands of
 splits) the guard is a no-op — the condition is checked plan-side
 without running a job — so the extra shuffle is paid exactly when it's
 cheapest (input small enough to have few splits) and skipped when it
-would hurt.
+would hurt. ``pinned_group_repartition`` pins the width of a grouping
+exchange that feeds a row-multiplying explode; both size themselves
+from ``session_width``.
 """
 
 from __future__ import annotations
@@ -58,48 +60,6 @@ def session_width(df: DataFrame) -> int:
     except (TypeError, ValueError):
         pass
     return n
-
-
-def stage_bucketed_by_key(
-    df: DataFrame, key: str, path: str, name: str, n_buckets: int | None = None
-) -> DataFrame:
-    """Persist ``df`` as a parquet staging table BUCKETED and SORTED by
-    ``key`` and return the catalog read-back (§6 / §2.4 "bucketed
-    tables persist a partitioning across jobs"): every later
-    equi-join or aggregation on ``key`` against the returned frame
-    skips the exchange — the scan itself reports
-    ``HashPartitioning(key, n_buckets)`` — and, because the pre-write
-    ``repartition(n, key)`` puts each bucket's rows in exactly ONE
-    task (Spark's bucket id and repartition both hash with pmod of
-    the same murmur3), the table lands one file per bucket, which is
-    the condition under which the scan also reports its SORT order
-    (session.py's bucketedTableScan.outputOrdering conf) and the
-    per-join Sort vanishes too.
-
-    Use when one derivation feeds REPEATED joins on the same key
-    ACROSS separate jobs or sessions (consume-batch's per-slice texts
-    join): the one staging write replaces N exchanges + N sorts of the
-    staged side. For iterative reuse WITHIN one job where the frame
-    fits the block cache, prefer ``repartition(key) +
-    sortWithinPartitions(key) + cache()`` instead — a cache (unlike a
-    localCheckpoint) forwards its child plan's partitioning/ordering
-    once materialized, giving the same exchange-free joins without the
-    table write + per-iteration parquet re-scan (measured on PageRank:
-    the table form cost more in re-scan I/O than the removed exchange
-    at sf0.1; the cache form keeps the plan win at parity cost —
-    workloads/graph_retrieval.py). ``n_buckets`` defaults to the
-    session-width scale knob."""
-    nb = n_buckets or session_width(df)
-    (
-        df.repartition(nb, key)
-        .write.format("parquet")
-        .bucketBy(nb, key)
-        .sortBy(key)
-        .mode("overwrite")
-        .option("path", path)
-        .saveAsTable(name)
-    )
-    return df.sparkSession.table(name)
 
 
 def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:

@@ -136,12 +136,6 @@ class SliceSpec:
             return "cleaned_classified_prices_buy_price_amount"
         return "cleaned_classified_prices_rent_baseRent_amount"
 
-    @property
-    def operating_cost_column(self) -> str:
-        if self.distribution_type == "BUY":
-            return "cleaned_classified_prices_buy_operatingCosts_amount"
-        return "cleaned_classified_prices_rent_operatingCosts_amount"
-
 
 DEFAULT_SLICES = tuple(
     SliceSpec(geoid, dist) for geoid in (108, 103) for dist in ("BUY", "RENT")
@@ -512,16 +506,19 @@ def consume_batch(tables: dict[str, DataFrame], dates: JobDates) -> DataFrame:
 
 
 def prepare_job(tables: dict[str, DataFrame], dates: JobDates, out_root: str) -> DataFrame:
-    """Stage 0 written once to ``<out_root>/_stage0_staging`` and read
-    back, so the slice frame scans the files instead of re-planning the
-    merge. A parquet staging table has no cache-residency limit and gets
+    """Stage 0 written once to ``<out_root>/_stage0_staging/merged`` and
+    read back, so the slice frame scans the files instead of re-planning
+    the merge. The table sits one level below the ``_``-prefixed
+    directory because Spark's file index treats a leaf whose name
+    starts with ``_`` or ``.`` as hidden and warns on every read. A
+    parquet staging table has no cache-residency limit and gets
     columnar scans with pruning; the block-manager cache it replaced
     lost at every measured scale >= sf0.1 (6.9 s vs 11.8 s at sf0.1,
     86.5 s vs 230.8 s at 64x, SCALE.md). Stage 2's small side inputs
     are not staged: they stay in the slice plan, as in the reference's
     one query."""
     merged = merge_delete(filter_changelog(tables["changelog"]), dates.first_day_past)
-    staging = f"{out_root}/_stage0_staging"
+    staging = f"{out_root}/_stage0_staging/merged"
     merged.write.mode("overwrite").parquet(staging)
     return tables["changelog"].sparkSession.read.parquet(staging)
 
@@ -553,11 +550,10 @@ def run_slices_concurrent(
     def sink(spec: SliceSpec) -> None:
         part = frame.where((geoid == spec.geoid) & (dist == spec.distribution_type))
         tag = f"{spec.geoid}_{spec.distribution_type}"
-        writers.write_csv_gzip(part, f"{out_root}/csv/{tag}", files=1)
+        writers.write_csv_gzip(part, f"{out_root}/csv/{tag}")
         writers.write_json_gzip(
             shape_json_output(part, spec.distribution_type, clock=json_clock),
             f"{out_root}/json/{tag}",
-            files=1,
         )
 
     with ThreadPoolExecutor(max_workers=len(DEFAULT_SLICES)) as pool:

@@ -15,6 +15,8 @@ bench, driver contract) sees identical behaviour:
   broadcast-join conversion.
 - **Dynamic partition overwrite** — the open-Spark replacement for the
   reference's ``purge_table`` + append sink (``script/main.py:395-416``).
+- **Python DataSource filter pushdown** — ``sources.pydatasource``
+  narrows its generated range from pushed filters.
 """
 
 from __future__ import annotations
@@ -56,14 +58,6 @@ def get_spark(
         # Spark 4.1: lets custom Python DataSources receive pushed
         # filters (sources.pydatasource narrows its generated range)
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        # r14: the bucketed staging tables (consume-batch texts,
-        # PageRank edges) are written sorted with ONE file per bucket
-        # (repartition-on-the-bucket-key before the write); this lets
-        # the scan REPORT that sort order so per-join Sorts vanish.
-        # Safe at any layout: Spark's guard (bucketsContainSingleFile,
-        # FileSourceScanLike) only claims ordering when every selected
-        # bucket holds a single file — multi-file buckets still sort.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config(
@@ -94,10 +88,6 @@ def apply_session_conf(spark: SparkSession) -> SparkSession:
         # runtime-settable; required before any read of a custom Python
         # DataSource that implements pushFilters (sources.pydatasource)
         ("spark.sql.python.filterPushdown.enabled", "true"),
-        # sorted single-file-per-bucket staging tables report their
-        # sort order (see get_spark) — guarded by Spark's
-        # bucketsContainSingleFile check, so safe on any layout
-        ("spark.sql.legacy.bucketedTableScan.outputOrdering", "true"),
     ):
         try:
             spark.conf.set(k, v)

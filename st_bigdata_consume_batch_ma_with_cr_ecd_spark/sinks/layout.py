@@ -108,52 +108,3 @@ def write_zordered(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def compact_small_files(
-    spark,
-    path: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    max_records_per_file: int | None = None,
-) -> int:
-    """The small-files fix: rewrite a parquet directory into
-    ``ceil(total_bytes / target)`` files. Streaming sinks and per-slice
-    appends leave thousands of KB-sized files; every future scan then
-    pays one task + one footer per file. Returns the new file count.
-
-    Rewrites in place via a temp dir + atomic-ish swap; at production
-    scale run per partition (compact only partitions whose file count
-    exceeds a threshold) so cost tracks fragmentation, not table size.
-    """
-    import math
-    import shutil
-    import uuid
-    from pathlib import Path
-
-    src = Path(path)
-    total = sum(f.stat().st_size for f in src.rglob("*.parquet"))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(str(src))
-    # A hive-partitioned root (date=.../ subdirs) must compact INTO the
-    # same layout — a flat rewrite would silently fold the partition
-    # columns into the data files and break partition pruning and every
-    # directory-addressed maintenance op. Partition columns are read
-    # off the first data file's directory chain (the same inference the
-    # reader used).
-    part_cols: list[str] = []
-    sample = next(src.rglob("*.parquet"), None)
-    if sample is not None:
-        for d in sample.relative_to(src).parts[:-1]:
-            if "=" in d:
-                part_cols.append(d.split("=", 1)[0])
-    tmp = src.parent / f".compact_{uuid.uuid4().hex[:8]}"
-    writer = df.repartition(n_files).write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(str(tmp))
-    shutil.rmtree(src)
-    tmp.rename(src)
-    return len(list(src.rglob("*.parquet")))

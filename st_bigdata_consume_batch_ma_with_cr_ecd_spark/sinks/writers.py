@@ -10,12 +10,12 @@ Open-Spark replacements for the reference's three outputs
   atomically per partition — the Glue purge/append pair collapsed into
   one idempotent write)
 
-Scale note on "one output file": the reference uses ``coalesce(1)``
-(``script/main.py:389``), which caps the *entire final stage* at one
-task — the #1 scalability hazard in the reference. We keep the intent
-behind an explicit ``files=`` knob but implement it as a post-shuffle
-``repartition(n)``, so upstream stages keep full parallelism and only
-the write itself is narrow.
+One output file, as the reference promises, but without its
+``coalesce(1)`` (``script/main.py:389``): that caps the *entire final
+stage* at one task, the #1 scalability hazard in the reference. The
+gzip writers shuffle to one partition with ``repartition(1)`` instead,
+so upstream stages keep full parallelism and only the write itself is
+narrow.
 """
 
 from __future__ import annotations
@@ -25,85 +25,20 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 
-def _shape_output(df: DataFrame, files: int | None, single_file: bool) -> DataFrame:
-    if single_file:
-        # Bit-parity escape hatch with the reference's coalesce(1)
-        # (script/main.py:389): ONE output file whose row order matches
-        # a single-partition computation exactly. Scale hazard by
-        # design — coalesce(1) collapses the final stage onto one task
-        # — so it must be asked for explicitly; the default files= knob
-        # keeps upstream parallelism via repartition.
-        if files not in (None, 1):
-            raise ValueError("single_file=True contradicts files != 1")
-        return df.coalesce(1)
-    if files is None:
-        return df
-    if files < 1:
-        raise ValueError("files must be >= 1")
-    # repartition (round-robin shuffle) NOT coalesce: coalesce(1) would
-    # collapse upstream computation onto one task.
-    return df.repartition(files)
+def write_json_gzip(df: DataFrame, path: str) -> None:
+    """K1: overwrite ``path`` with one gzip JSON-lines file."""
+    df.repartition(1).write.mode("overwrite").option("compression", "gzip").json(path)
 
 
-def write_json_gzip(
-    df: DataFrame,
-    path: str,
-    *,
-    files: int | None = None,
-    mode: str = "overwrite",
-    single_file: bool = False,
-) -> None:
+def write_csv_gzip(df: DataFrame, path: str) -> None:
+    """K2: overwrite ``path`` with one gzip CSV file with a header row."""
     (
-        _shape_output(df, files, single_file)
-        .write.mode(mode)
+        df.repartition(1)
+        .write.mode("overwrite")
         .option("compression", "gzip")
-        .json(path)
-    )
-
-
-def write_csv_gzip(
-    df: DataFrame,
-    path: str,
-    *,
-    files: int | None = None,
-    header: bool = True,
-    mode: str = "overwrite",
-    single_file: bool = False,
-) -> None:
-    (
-        _shape_output(df, files, single_file)
-        .write.mode(mode)
-        .option("compression", "gzip")
-        .option("header", str(header).lower())
+        .option("header", "true")
         .csv(path)
     )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int,
-    *,
-    sort_cols: Sequence[str] | None = None,
-    format: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table hash-bucketed (and optionally sorted) by join key.
-
-    Two tables bucketed by the same key with the same bucket count join
-    with NO exchange on either side — the shuffle is paid once at write
-    time and amortized over every subsequent join/aggregation on that
-    key (verified by plan in ``tests/test_plans.py``). The 100-TB answer
-    for repeatedly-joined fact tables, where the reference re-shuffles
-    per run.
-    """
-    if n_buckets < 1:
-        raise ValueError("n_buckets must be >= 1")
-    writer = df.write.mode(mode).format(format).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
 
 
 def overwrite_partitions(
@@ -111,7 +46,6 @@ def overwrite_partitions(
     path_or_table: str,
     partition_by: Sequence[str],
     *,
-    format: str = "parquet",
     as_table: bool = False,
 ) -> None:
     """K3: replace exactly the partitions present in ``df``.
@@ -139,8 +73,8 @@ def overwrite_partitions(
             table_cols = df.sparkSession.table(path_or_table).columns
             df.select(*table_cols).write.mode("overwrite").insertInto(path_or_table)
         else:
-            df.write.mode("overwrite").format(format).partitionBy(*partition_by).saveAsTable(
+            df.write.mode("overwrite").format("parquet").partitionBy(*partition_by).saveAsTable(
                 path_or_table
             )
     else:
-        df.write.mode("overwrite").format(format).partitionBy(*partition_by).save(path_or_table)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path_or_table)

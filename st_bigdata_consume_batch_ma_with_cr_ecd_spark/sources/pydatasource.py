@@ -23,15 +23,11 @@ for Spark to apply post-scan.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceWriter,
     EqualTo,
     GreaterThan,
     GreaterThanOrEqual,
@@ -39,7 +35,6 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 EVENT_TYPES = ("view", "click", "purchase", "refund")
@@ -131,89 +126,6 @@ class SyntheticEventsDataSource(DataSource):
 def register_synthetic_source(spark) -> None:
     """Idempotent registration (re-registering the same name is fine)."""
     spark.dataSource.register(SyntheticEventsDataSource)
-
-
-# ---------------------------------------------------------------------------
-# Write path: JSON-lines sink with a commit/abort protocol
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class _WroteFile(WriterCommitMessage):
-    temp_path: str
-    final_path: str
-    n_rows: int
-
-
-class JsonLinesWriter(DataSourceWriter):
-    """Task-isolated JSON-lines writer demonstrating the Python
-    DataSource COMMIT PROTOCOL — the part a naive foreach writer gets
-    wrong: each task writes to a task-private temp file and reports it
-    in its :class:`WriterCommitMessage`; only the driver-side
-    ``commit`` (which runs iff EVERY task succeeded) renames temp
-    files into place, and ``abort`` removes the orphans. A job that
-    dies mid-write leaves no partial output visible — the same
-    all-or-nothing contract FileOutputCommitter gives JVM sinks.
-    """
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("option 'path' is required for the jsonlines sink")
-
-    def write(self, iterator) -> _WroteFile:
-        os.makedirs(self.path, exist_ok=True)
-        part = uuid.uuid4().hex[:16]
-        temp = os.path.join(self.path, f"_temp_{part}.jsonl")
-        n = 0
-        with open(temp, "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict(), default=str) + "\n")
-                n += 1
-        return _WroteFile(temp, os.path.join(self.path, f"part-{part}.jsonl"), n)
-
-    def _sweep_orphan_temps(self) -> None:
-        # a task that DIED mid-write never produced a commit message, so
-        # its temp file is invisible to commit/abort via `messages` —
-        # sweep the naming convention instead. Single-writer-per-path
-        # assumption (same as FileOutputCommitter's _temporary dir).
-        if os.path.isdir(self.path):
-            for name in os.listdir(self.path):
-                if name.startswith("_temp_") and name.endswith(".jsonl"):
-                    try:
-                        os.remove(os.path.join(self.path, name))
-                    except OSError:
-                        pass
-
-    def commit(self, messages) -> None:
-        for m in messages:
-            if m is not None:
-                os.replace(m.temp_path, m.final_path)
-        self._sweep_orphan_temps()  # leftovers from retried attempts
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.temp_path):
-                os.remove(m.temp_path)
-        self._sweep_orphan_temps()
-
-
-class JsonLinesDataSource(DataSource):
-    """``df.write.format("jsonlines").option("path", d).mode("append")``
-    after ``spark.dataSource.register(JsonLinesDataSource)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonlines"
-
-    def writer(self, schema, overwrite: bool) -> JsonLinesWriter:
-        if overwrite:
-            raise ValueError("jsonlines sink is append-only (use a fresh path)")
-        return JsonLinesWriter(self.options)
-
-
-def register_jsonlines_sink(spark) -> None:
-    spark.dataSource.register(JsonLinesDataSource)
 
 
 # ---------------------------------------------------------------------------

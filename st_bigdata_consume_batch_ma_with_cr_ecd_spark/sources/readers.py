@@ -8,7 +8,12 @@ Spark-native replacements for the reference's Glue
 - S2 catalog scan + partition pushdown -> ``read_table_pruned``
   (a plain ``.where`` on the partition column; Catalyst's static
   partition pruning replaces Glue's ``push_down_predicate``)
+- S3 catalog scan, no predicate -> ``read_table_pruned`` without bounds
 - S4 CSV scan with header      -> ``read_csv_lookup``
+
+``read_testdata`` loads the synthetic benchmark tables. Other formats
+(JSON lines, ORC, schema-merging parquet) are one ``DataFrameReader``
+call each and get no wrapper here.
 """
 
 from __future__ import annotations
@@ -141,43 +146,3 @@ def load_nanos_events(spark: SparkSession, path: str, ts_col: str = "ts") -> Dat
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_event_ts(spark.read.parquet(path), ts_col)
-
-
-def read_json_lines(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    *,
-    recursive: bool = True,
-) -> DataFrame:
-    """JSONL scan (the interchange format of most public text corpora).
-
-    ALWAYS pass a schema in production: schema inference runs a full
-    extra pass over 100 TB before the real read. Corrupt lines land in
-    ``_corrupt_record`` (PERMISSIVE mode) instead of failing the job —
-    filter or quarantine them explicitly.
-    """
-    reader = spark.read.option("recursiveFileLookup", str(recursive).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str, *, columns: list[str] | None = None) -> DataFrame:
-    """ORC scan — same pushdown/pruning behavior as parquet (both are
-    columnar with stats footers); included so warehouses with ORC-era
-    history can feed the same operators."""
-    df = spark.read.orc(path)
-    return df.select(*columns) if columns else df
-
-
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution-tolerant parquet scan: ``mergeSchema`` unions the
-    footer schemas of every file, so files written before a column was
-    added read as NULL in that column instead of failing.
-
-    Costs one footer read per file (not a data scan) — fine nightly,
-    but pin an explicit schema on hot paths; at 100 TB the footer
-    listing alone is a driver-side cost worth caching in a catalog.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(path)

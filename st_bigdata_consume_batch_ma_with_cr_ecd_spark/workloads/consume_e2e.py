@@ -20,8 +20,9 @@ covers the whole job including the storage roundtrip.
 
 Scale notes: identical to the pipeline module's — ONE scan+shuffle for
 the stage-0 merge, staged once; the four slices are one plan, so each
-stage shuffles once for all of them; both geo dims broadcast. The sinks are ``files=1`` gzip per the reference's contract
-(bounded repartition, never ``coalesce(1)``).
+stage shuffles once for all of them; both geo dims broadcast. The gzip
+sinks write one file per slice, per the reference's contract, via
+``repartition(1)``, never ``coalesce(1)``.
 """
 
 from __future__ import annotations

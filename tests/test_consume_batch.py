@@ -624,7 +624,7 @@ def test_e2e_slices_reuse_cached_merge(spark, prepared_e2e):
     ``_stage0_staging`` parquet table and must not re-plan any part of
     the merge (its union, as-of join or change-log scan)."""
     t, merged, out, _ = prepared_e2e
-    assert any((out / "_stage0_staging").glob("*.parquet"))
+    assert any((out / "_stage0_staging").rglob("*.parquet"))
     first = basedata_first(merged, t["texts"], (SliceSpec(108, "BUY"),))
     # every file stage 1 reads is the staged stage 0 or the texts input
     files = first.inputFiles()
@@ -634,6 +634,15 @@ def test_e2e_slices_reuse_cached_merge(spark, prepared_e2e):
     plan = first._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
     assert "InMemoryTableScan" not in plan
+
+
+def test_stage0_staging_root_is_not_hidden(prepared_e2e):
+    """No directory holding the staged stage 0 starts with ``_`` or
+    ``.``: Spark's file index treats such a leaf as hidden and logs
+    "All paths were ignored" on every read-back."""
+    _, merged, _, _ = prepared_e2e
+    parents = {f.rsplit("/", 2)[-2] for f in merged.inputFiles()}
+    assert parents and not any(p.startswith(("_", ".")) for p in parents), parents
 
 
 def test_one_pass_frame_scans_stage0_as_often_as_one_slice(spark, prepared_e2e):

@@ -1,5 +1,5 @@
 """Source and sink behavior: testdata loading (incl. the nanos-timestamp
-escape hatch), gzip writers, bounded file counts, dynamic partition
+escape hatch), one-file gzip writers, dynamic partition
 overwrite replacing the reference's purge_table+append."""
 
 from __future__ import annotations
@@ -45,7 +45,7 @@ def test_read_csv_lookup_with_schema(spark, tmp_path):
 def test_write_csv_gzip_single_file(spark, tmp_path):
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     out = str(tmp_path / "csv_out")
-    write_csv_gzip(df, out, files=1)
+    write_csv_gzip(df, out)
     parts = list(Path(out).glob("part-*.csv.gz"))
     assert len(parts) == 1
     back = spark.read.option("header", "true").csv(out)
@@ -55,32 +55,11 @@ def test_write_csv_gzip_single_file(spark, tmp_path):
 def test_write_json_gzip_roundtrip_nested(spark, tmp_path):
     df = spark.createDataFrame([(1, ("x", 2))], "id int, s struct<a:string,b:int>")
     out = str(tmp_path / "json_out")
-    write_json_gzip(df, out, files=1)
+    write_json_gzip(df, out)
     assert list(Path(out).glob("part-*.json.gz"))
     back = spark.read.json(out)
     row = back.collect()[0]
     assert row.id == 1 and row.s.a == "x" and row.s.b == 2
-
-
-def test_write_files_must_be_positive(spark, tmp_path):
-    with pytest.raises(ValueError):
-        write_csv_gzip(spark.range(1), str(tmp_path / "x"), files=0)
-
-
-def test_single_file_escape_hatch_preserves_order(spark, tmp_path):
-    # single_file=True is the coalesce(1) bit-parity path: exactly one
-    # file AND rows in computation order (repartition would round-robin
-    # them), the reference's exact sink contract (script/main.py:389)
-    df = spark.range(50).orderBy(F.col("id").desc()).withColumn("v", F.col("id") * 2)
-    out = str(tmp_path / "single")
-    write_csv_gzip(df, out, single_file=True)
-    parts = list(Path(out).glob("part-*.csv.gz"))
-    assert len(parts) == 1
-    back = spark.read.option("header", "true").csv(str(parts[0]))
-    ids = [int(r.id) for r in back.collect()]
-    assert ids == list(range(49, -1, -1))  # order survives the single task
-    with pytest.raises(ValueError, match="single_file"):
-        write_csv_gzip(df, out, files=3, single_file=True)
 
 
 def test_overwrite_partitions_touches_only_written_partitions(spark, tmp_path):
@@ -142,38 +121,6 @@ def test_zorder_layout_narrows_file_stats_on_both_dims(spark, sf_dir, tmp_path):
     assert z_cust < full, (z_cust, full)
 
 
-def test_jsonl_roundtrip_with_corrupt_record_capture(spark, tmp_path):
-    import json
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sources.readers import read_json_lines
-
-    p = tmp_path / "docs"
-    p.mkdir()
-    lines = [json.dumps({"id": 1, "text": "hello"}), "{not json", json.dumps({"id": 2, "text": "ok"})]
-    (p / "part-0.jsonl").write_text("\n".join(lines))
-    df = read_json_lines(
-        spark, str(p), "id long, text string, _corrupt_record string"
-    ).cache()
-    try:
-        good = df.where("_corrupt_record IS NULL")
-        bad = df.where("_corrupt_record IS NOT NULL")
-        assert {(r.id, r.text) for r in good.collect()} == {(1, "hello"), (2, "ok")}
-        assert bad.count() == 1  # quarantined, not a job failure
-    finally:
-        df.unpersist()
-
-
-def test_orc_roundtrip_preserves_schema(spark, sf_dir, tmp_path):
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sources.readers import read_orc, read_testdata
-
-    orders = read_testdata(spark, sf_dir, "orders").limit(100)
-    path = str(tmp_path / "orders_orc")
-    orders.write.mode("overwrite").orc(path)
-    back = read_orc(spark, path, columns=["o_orderkey", "o_totalprice"])
-    assert back.columns == ["o_orderkey", "o_totalprice"]
-    assert back.count() == 100
-
-
 def test_foreach_batch_partition_overwrite_is_idempotent(spark, sf_dir, tmp_path):
     """Re-running a micro-batch (crash-retry) must converge, not append:
     the partition-overwrite batch sink rewrites the same partitions with
@@ -215,38 +162,6 @@ def test_foreach_batch_partition_overwrite_is_idempotent(spark, sf_dir, tmp_path
     partition_overwrite_batch_writer(out, ["etype"])(batch, epoch_id=0)
     n2 = spark.read.parquet(out).count()
     assert n2 == n1  # converged, no duplicate rows
-
-
-def test_read_parquet_evolved_tolerates_added_column(spark, tmp_path):
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sources.readers import (
-        read_parquet_evolved,
-    )
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a")], "id int, name string").write.parquet(p)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id int, name string, score double"
-    ).write.mode("append").parquet(p)
-    df = read_parquet_evolved(spark, p)
-    rows = {r.id: (r.name, r.score) for r in df.collect()}
-    assert rows == {1: ("a", None), 2: ("b", 9.5)}
-
-
-def test_compact_small_files_preserves_rows(spark, sf_dir, tmp_path):
-    from pathlib import Path
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sinks.layout import compact_small_files
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sources.readers import read_testdata
-
-    p = str(tmp_path / "frag")
-    orders = read_testdata(spark, sf_dir, "orders")
-    orders.repartition(32).write.parquet(p)  # fragment: 32 tiny files
-    assert len(list(Path(p).rglob("*.parquet"))) == 32
-    before = spark.read.parquet(p).count()
-
-    n = compact_small_files(spark, p, target_file_bytes=10 * 1024 * 1024)
-    assert n < 32
-    assert spark.read.parquet(p).count() == before
 
 
 def test_overwrite_partitions_as_catalog_table(spark, tmp_path):
@@ -357,55 +272,6 @@ def test_python_datasource_rowid_pushdown_narrows_generation(spark):
     assert small.where(small.event_type == "view").count() > 0
 
 
-def test_python_datasink_commit_protocol(spark, tmp_path):
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sources.pydatasource import (
-        register_jsonlines_sink,
-    )
-    import json as _json
-    import os as _os
-
-    register_jsonlines_sink(spark)
-    out = str(tmp_path / "sink")
-    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id int, tag string")
-    df.repartition(2).write.format("jsonlines").option("path", out).mode("append").save()
-    files = sorted(_os.listdir(out))
-    # commit renamed every task file into place; no temp orphans
-    assert all(f.startswith("part-") and f.endswith(".jsonl") for f in files)
-    assert len(files) == 2
-    rows = []
-    for f in files:
-        with open(_os.path.join(out, f)) as fh:
-            rows += [_json.loads(line) for line in fh]
-    assert sorted((r["id"], r["tag"]) for r in rows) == [(1, "a"), (2, "b"), (3, "c")]
-
-
-def test_python_datasink_abort_leaves_no_partial_output(spark, tmp_path):
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sources.pydatasource import (
-        register_jsonlines_sink,
-    )
-    import os as _os
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    register_jsonlines_sink(spark)
-    out = str(tmp_path / "sink_abort")
-    df = spark.range(4).select(
-        "id",
-        F.when(F.col("id") < 3, F.col("id"))
-        .otherwise(F.expr("raise_error('boom')"))
-        .alias("v"),
-    )
-    with _pytest.raises(Exception, match="boom"):
-        df.repartition(2).write.format("jsonlines").option("path", out).mode("append").save()
-    # abort removed the temp files of the tasks that had started; the
-    # all-or-nothing contract: nothing committed
-    leftover = [f for f in (_os.listdir(out) if _os.path.isdir(out) else [])]
-    assert not [f for f in leftover if f.startswith("part-")]
-    # the DEAD task's temp file (it never reported a commit message)
-    # must be swept too — a *.jsonl glob must see no partial data
-    assert not [f for f in leftover if f.endswith(".jsonl")]
-
-
 def test_python_streaming_source_drains_with_offset_protocol(spark):
     import uuid as _uuid
 
@@ -481,29 +347,6 @@ def test_python_streaming_source_checkpoint_restart_exactly_once(spark, tmp_path
     ids = [r.row_id for r in spark.read.parquet(out).select("row_id").collect()]
     assert len(ids) == 2000
     assert sorted(ids) == list(range(2000))
-
-
-def test_compact_small_files_preserves_hive_partition_layout(spark, tmp_path):
-    import os
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sinks.layout import (
-        compact_small_files,
-    )
-
-    path = str(tmp_path / "parts")
-    df = spark.createDataFrame(
-        [(i, "DE" if i % 2 == 0 else "AT", float(i)) for i in range(100)],
-        "id long, country string, v double",
-    )
-    df.repartition(8).write.partitionBy("country").parquet(path)
-    compact_small_files(spark, path, target_file_bytes=10**9)
-    # the hive layout survives compaction (a flat rewrite would fold
-    # the partition column into the files and break pruning)
-    assert os.path.isdir(os.path.join(path, "country=DE"))
-    assert os.path.isdir(os.path.join(path, "country=AT"))
-    back = spark.read.parquet(path)
-    assert back.count() == 100
-    assert {r.country for r in back.select("country").distinct().collect()} == {"AT", "DE"}
 
 
 def test_zorder_rejects_sign_bit_overflow_and_handles_dates(spark, tmp_path):

@@ -101,46 +101,6 @@ def test_dim_filters_push_below_joins(spark, sf_dir, name):
     assert "PushedFilters: [" in plan
 
 
-def test_bucketed_tables_join_without_exchange(spark, sf_dir):
-    # the point of bucketing: pay the shuffle at write time, join free after
-    import contextlib
-    import io
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sinks.writers import write_bucketed_table
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sources.readers import read_testdata
-
-    orders = read_testdata(spark, sf_dir, "orders")
-    lineitem = read_testdata(spark, sf_dir, "lineitem")
-    write_bucketed_table(orders, "orders_bkt", ["o_orderkey"], 4, sort_cols=["o_orderkey"])
-    write_bucketed_table(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "lineitem_bkt",
-        ["o_orderkey"],
-        4,
-        sort_cols=["o_orderkey"],
-    )
-    try:
-        joined = (
-            spark.table("orders_bkt")
-            .hint("merge")  # force SMJ so the exchange (or its absence) is visible
-            .join(spark.table("lineitem_bkt"), "o_orderkey")
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # both sides read pre-bucketed
-        n = joined.count()
-        plain = orders.join(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-        ).count()
-        assert n == plain
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_bkt")
-        spark.sql("DROP TABLE IF EXISTS lineitem_bkt")
-
-
 @pytest.mark.parametrize("name", ["range_event_proximity", "range_order_overlap"])
 def test_keyless_range_joins_avoid_nested_loop(spark, sf_dir, name):
     # the whole point of the bucketing rewrite: a keyless range join
@@ -786,52 +746,3 @@ def test_audio_energy_windows_shuffles_ids_only(spark, sf_dir):
     assert "RoundRobinPartitioning" in plan
 
 
-def test_bucketed_staging_table_joins_without_exchange_or_sort(spark, tmp_path):
-    # r14: stage_bucketed_by_key writes sorted one-file-per-bucket
-    # tables so REPEATED joins on the key (consume-batch texts,
-    # PageRank edges) never exchange or sort the staged side again.
-    # Contract checked here with the broadcast threshold off (the
-    # at-scale shape): the staged side of the SMJ must carry neither
-    # an Exchange nor a Sort, and the layout must be one file per
-    # bucket (the condition Spark's bucketsContainSingleFile guard
-    # needs to honor the sortBy metadata).
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.operators.partitioning import (
-        stage_bucketed_by_key,
-    )
-
-    n = 8
-    staged = stage_bucketed_by_key(
-        spark.range(5000).select(
-            F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-        ),
-        "k",
-        str(tmp_path / "staged"),
-        "test_bucketed_staging_tbl",
-        n_buckets=n,
-    )
-    files = glob.glob(str(tmp_path / "staged" / "part-*.parquet"))
-    assert len(files) == n  # one file per bucket — parallel write held
-
-    other = spark.range(500).select(F.col("id").alias("k"), F.lit(1).alias("j"))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = other.join(staged, "k")._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "SortMergeJoin" in plan
-    # exactly ONE exchange+sort pair (the probe side); the staged side
-    # reads bucketed and pre-sorted (each physical node prints twice)
-    assert plan.count("Exchange") == 2, plan
-    import re
-
-    assert len(re.findall(r"^\(\d+\) Sort$", plan, flags=re.MULTILINE)) == 1, plan
-    assert "Bucketed: true" in plan

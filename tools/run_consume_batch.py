@@ -13,7 +13,7 @@ visibility, fraud, contacts, visits, bundeslaender, stadtlandkreise``
 (schemas: see pipelines.consume_batch docstrings / tests). ``--days-ago
 full_refresh`` rewinds to the data epoch like the reference's flag.
 The output dir gets ``csv/<slice>``, ``json/<slice>`` and ``parquet/``,
-plus the job's stage-0 staging table ``_stage0_staging``.
+plus the job's stage-0 staging table ``_stage0_staging/merged``.
 """
 
 from __future__ import annotations
