@@ -32,7 +32,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.partitioning import ensure_min_partitions
@@ -65,7 +65,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.1,
     max_shingle_freq: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by word-k-gram Jaccard >= threshold.
 
@@ -83,10 +82,10 @@ def ngram_jaccard_pairs(
     The bucket aggregate (tokenize -> shingle-explode -> collect_list —
     the most expensive stage of the whole dedup) fans out to THREE
     consumers: the pair generator plus both sides of the sizes join.
-    Catalyst does not reuse the subtree across those branches (r2 plan
-    audit: 22 Exchanges, 0 ReusedExchange = the shingle pipeline ran
-    3x), so ``materialize=True`` cuts the lineage with an eager
-    ``localCheckpoint`` after the aggregate — the shingle stage runs
+    Catalyst does not reuse the subtree across those branches (a plan
+    audit counted 22 Exchanges, 0 ReusedExchange = the shingle pipeline
+    ran 3x), so an eager ``localCheckpoint`` after the aggregate cuts
+    the lineage — the shingle stage runs
     exactly once and all three consumers scan the stored partitions.
     Same pattern as ``operators/graph.py``'s per-round checkpoint; the
     same caveat applies (localCheckpoint is not fault-tolerant — on a
@@ -95,7 +94,7 @@ def ngram_jaccard_pairs(
     ``sa``/``sb`` join branches share one aggregation instead of two.
     """
     counts = _pair_overlap_counts(
-        df, text_col, id_col, k=k, max_shingle_freq=max_shingle_freq, materialize=materialize
+        df, text_col, id_col, k=k, max_shingle_freq=max_shingle_freq
     )
     jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
     return (
@@ -112,7 +111,6 @@ def _pair_overlap_counts(
     *,
     k: int,
     max_shingle_freq: int | None,
-    materialize: bool,
 ) -> DataFrame:
     """Shared machinery of the set-overlap dedup family: per-pair
     ``(doc_a, doc_b, shared, na, nb)`` where ``shared`` is the count of
@@ -121,36 +119,27 @@ def _pair_overlap_counts(
     numerators and denominators agree). Jaccard, containment, and
     overlap coefficients are all pure projections of these three
     counts."""
-    from ..operators.partitioning import pinned_group_repartition
-
     sh = _doc_shingles(df, text_col, id_col, k).select(F.col(id_col).alias("doc"), "shingle")
-    # UNPINNED grouping exchange on the materialize path (r14,
-    # reversing the r13 pre-group pin on this operator — the r13
-    # verdict's one real regression): unlike the quadratic pair
-    # generators (_bucket_pairs, fuzzy, recsys — their pins stay), the
-    # overlap-counts family's explode multiplier is ~1 by construction
-    # (shingle buckets are near-singleton; hot ones are capped), so the
-    # pin bought no parallelism and taxed the aggregate + checkpoint +
-    # every downstream stage with full-width task overhead. Measured
-    # A/B (min over 3 alternating fresh processes, best-of-2 each):
-    # pinned 4.41/3.00 s vs unpinned 3.07/2.50 s on
+    # UNPINNED grouping exchange: unlike the quadratic pair generators
+    # (_bucket_pairs, fuzzy, recsys — their pins stay), this family's
+    # explode multiplier is ~1 by construction (shingle buckets are
+    # near-singleton; hot ones are capped), so a pin buys no
+    # parallelism and taxes the aggregate, the checkpoint and every
+    # downstream stage with full-width task overhead. Measured A/B (min
+    # over 3 alternating fresh processes, best-of-2 each): pinned
+    # 4.41/3.00 s vs unpinned 3.07/2.50 s on
     # dedup_ngram_jaccard{,_pruned}. A post-checkpoint
-    # ensure_min_partitions fan-out was also tried and REJECTED: the
+    # ensure_min_partitions fan-out was also tried and rejected: the
     # grouped rows carry the whole corpus as __docs arrays, so the
     # "cheap" round-robin is a full corpus shuffle at small scale
     # (measured 4.37 s — as bad as the pin) and a no-op at large scale
-    # (multi-partition checkpoints) — worthless at every size. The
-    # unmaterialized path keeps the r13 pinned width: with no
-    # checkpoint the explode runs directly on top of the grouping
-    # exchange, and an AQE-coalesced width would serialize it.
-    src = sh if materialize else pinned_group_repartition(sh, "shingle")
-    buckets = src.groupBy("shingle").agg(
+    # (multi-partition checkpoints).
+    buckets = sh.groupBy("shingle").agg(
         F.sort_array(F.collect_list("doc")).alias("__docs")
     )
     if max_shingle_freq is not None:
         buckets = buckets.where(F.size("__docs") <= max_shingle_freq)
-    if materialize:
-        buckets = buckets.localCheckpoint(eager=True)
+    buckets = buckets.localCheckpoint(eager=True)
 
     # sizes over the (possibly pruned) shingle universe, matching the
     # pair counts' denominator
@@ -158,9 +147,8 @@ def _pair_overlap_counts(
         buckets.select(F.explode("__docs").alias("doc"))
         .groupBy("doc")
         .agg(F.count(F.lit(1)).alias("n_shingles"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        sizes = sizes.localCheckpoint(eager=True)
     pair_structs = F.expr(
         "transform(__docs, (x, i) ->"
         " transform(slice(__docs, i + 2, size(__docs)), y -> struct(x AS doc_a, y AS doc_b)))"
@@ -178,7 +166,7 @@ def _pair_overlap_counts(
     # underestimate. Making the side measurable (repartition under the
     # build) does NOT fix this: AQE demotion is cost-gated and keeps a
     # static broadcast whenever the SMJ re-plan adds an exchange, so
-    # the only 100-TB-safe shape is the explicit pin (SCALE.md round 6)
+    # the only 100-TB-safe shape is the explicit pin (SCALE.md)
     return shared.join(sa.hint("merge"), "doc_a").join(sb.hint("merge"), "doc_b")
 
 
@@ -190,7 +178,6 @@ def ngram_containment_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Directed near-duplicate CONTAINMENT: ``shared/|A|`` and
     ``shared/|B|`` per candidate pair, kept when either direction
@@ -204,7 +191,7 @@ def ngram_containment_pairs(
     shingle shuffle + one pair shuffle, no self-join); the two ratios
     are free projections of the shared overlap counts."""
     counts = _pair_overlap_counts(
-        df, text_col, id_col, k=k, max_shingle_freq=max_shingle_freq, materialize=materialize
+        df, text_col, id_col, k=k, max_shingle_freq=max_shingle_freq
     )
     c_ab = F.round(F.col("shared") / F.col("na"), 4)
     c_ba = F.round(F.col("shared") / F.col("nb"), 4)
@@ -223,7 +210,6 @@ def jaccard_prefix_filtered_pairs(
     *,
     k: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT Jaccard similarity join via prefix filtering (SSJoin /
     PPJoin family: Chaudhuri et al. ICDE'06, Xiao et al. WWW'08).
@@ -243,13 +229,14 @@ def jaccard_prefix_filtered_pairs(
 
     The ``(doc, shingle)`` table fans out to three consumers (frequency
     order, prefix, the per-doc set aggregate that backs verification),
-    so ``materialize`` checkpoints it once — same rationale as
-    ``ngram_jaccard_pairs``; the set aggregate is checkpointed too so
-    both pair-side joins scan one stored copy.
+    so it is checkpointed once — same rationale as
+    ``ngram_jaccard_pairs``.
     """
-    sh = _doc_shingles(df, text_col, id_col, k).select(F.col(id_col).alias("doc"), "shingle")
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = (
+        _doc_shingles(df, text_col, id_col, k)
+        .select(F.col(id_col).alias("doc"), "shingle")
+        .localCheckpoint(eager=True)
+    )
 
     from pyspark.sql import Window
 
@@ -257,10 +244,10 @@ def jaccard_prefix_filtered_pairs(
     w = Window.partitionBy("doc").orderBy(F.asc("__freq"), F.asc("shingle"))
     # merge pin: freq is SHINGLE-VOCABULARY-sized (grows with the
     # corpus) off the checkpoint's inherited estimate — an
-    # estimate-driven broadcast of the vocabulary would OOM at 100 TB
-    # (r6 hazard sweep). A window-count over shingle instead of this
-    # join would avoid the shuffle but melts on hot boilerplate
-    # shingles (no partial aggregation), so agg + pinned join it is.
+    # estimate-driven broadcast of the vocabulary would OOM at 100 TB.
+    # A window-count over shingle instead of this join would avoid the
+    # shuffle but melts on hot boilerplate shingles (no partial
+    # aggregation), so agg + pinned join it is.
     ordered = (
         sh.join(freq.hint("merge"), "shingle")
         .withColumn("__rank", F.row_number().over(w))
@@ -282,7 +269,7 @@ def jaccard_prefix_filtered_pairs(
     candidates = _bucket_pairs(prefix, "shingle")
 
     # verification: exact overlap via per-doc shingle SETS and a JVM
-    # array_intersect — two joins total (vs the r2-r5 shape's four:
+    # array_intersect — two joins total (vs an exploded shape's four:
     # explode-join on doc_a, explode-join on (doc_b, shingle), then a
     # pair groupBy plus two sizes joins). Sets are doc-bounded arrays,
     # so the join payload is the same bytes as the exploded rows but
@@ -290,7 +277,7 @@ def jaccard_prefix_filtered_pairs(
     # merge pins: docsets is a DOC-sized checkpoint descendant whose
     # estimate is the inherited explode underestimate — an unpinned
     # plan statically broadcasts it, and AQE demotion is cost-gated
-    # (SCALE.md round 6), so the pin is the only 100-TB-safe shape.
+    # (SCALE.md), so the pin is the only 100-TB-safe shape.
     # deliberately NOT checkpointed: docsets is a second corpus-sized
     # table, and storing it alongside the sh checkpoint doubles the
     # materialized footprint (measured: Java heap exhaustion at 64x
@@ -430,13 +417,13 @@ def minhash_verified_pairs(
     sigs = minhash_signatures(
         df, text_col, id_col, k_shingle=k_shingle, num_hashes=num_hashes
     ).localCheckpoint(eager=True)
-    # CARRY path (r13, guide §2.4): the signatures ride through pair
-    # generation (struct(doc, signature) per bucket), so the agreement
-    # score computes in the explode's own stage and the distinct dedups
-    # the VERIFIED set — replacing distinct-then-two-sort-merge-joins
-    # back against the signature checkpoint. n_agree/est_jaccard are
-    # functional on the pair, so distinct over the four output columns
-    # equals the old shape row for row.
+    # the signatures ride through pair generation (struct(doc,
+    # signature) per bucket), so the agreement score computes in the
+    # explode's own stage and the distinct dedups the VERIFIED set — no
+    # distinct-then-two-sort-merge-joins back against the signature
+    # checkpoint. n_agree/est_jaccard are functional on the pair, so
+    # distinct over the four output columns equals distinct pairs
+    # joined and scored.
     pairs = lsh_candidate_pairs(
         sigs,
         id_col,
@@ -457,44 +444,11 @@ def minhash_verified_pairs(
     )
 
 
-def _rewrite_pair_filter(sql: str) -> str:
-    """Rewrite a ``pair_filter_sql`` hook (written against the bare
-    lambda ids ``x``/``y`` per the documented contract) onto the
-    payload branch's (d, p) struct variables: ``x`` -> ``x.d``,
-    ``y`` -> ``y.d``. Word-boundary substitution, so column or function
-    names merely containing the letters are untouched; ``x`` runs
-    first and produces ``x.d``, which the ``y`` pass cannot match.
-
-    The rewrite is TEXTUAL, so hooks outside the bare lowercase-id
-    contract are rejected up front (r13 ADVICE): a quoted span could
-    contain a standalone ``x``/``y`` the regex would corrupt
-    (``"x IN ('x')"`` -> ``'x.d'``), and Spark's case-insensitive
-    lambda resolution would bind an uppercase ``X``/``Y`` to the whole
-    struct on this branch but to the bare id on the join-back branch —
-    both would silently diverge between the two physically-equivalent
-    paths, so they fail loudly instead."""
-    import re
-
-    if re.search(r"['\"]", sql):
-        raise ValueError(
-            "pair_filter_sql must not contain string literals: the "
-            "carry-path rewrite is textual and would corrupt a quoted "
-            f"x/y — got {sql!r}"
-        )
-    if re.search(r"\b[XY]\b", sql):
-        raise ValueError(
-            "pair_filter_sql must reference the pair ids as lowercase "
-            f"bare x/y — got {sql!r}"
-        )
-    return re.sub(r"\by\b", "y.d", re.sub(r"\bx\b", "x.d", sql))
-
-
 def _bucket_pairs(
     buckets: DataFrame,
     *key_cols: str,
     max_bucket_size: int | None = None,
-    pair_filter_sql: str | None = None,
-    flag_col: str | None = None,
+    batch: Column | None = None,
     distinct_pairs: bool = True,
     dedup_docs: bool = False,
     payload_col: str | None = None,
@@ -514,26 +468,13 @@ def _bucket_pairs(
     equals ``distinct`` -> ``sort_array(collect_list)`` row for row),
     removing a full shuffle of the bucket table.
 
-    ``pair_filter_sql``: optional SQL boolean over ``x`` (smaller id)
-    and ``y`` (larger id) applied INSIDE pair generation, before any
-    pair row materializes — the incremental-dedup hook: restrict to
-    pairs touching the new batch and per-batch dedup cost tracks the
-    batch, not the corpus (pairs the filter rejects are never emitted,
-    shuffled, or distinct'ed). The ids must appear as bare LOWERCASE
-    ``x``/``y`` and the hook must not contain string literals — the
-    payload branch rewrites the hook textually onto its struct
-    variables and rejects hooks outside that contract
-    (:func:`_rewrite_pair_filter`).
-
-    ``flag_col``: name of a BOOLEAN column on ``buckets`` marking rows
-    of the ARRIVING BATCH — the data-defined-batch generalization of
-    ``pair_filter_sql`` (which needs the batch to be an id-expressible
-    predicate): membership travels WITH the row into the grouped
-    struct list, and only pairs where AT LEAST ONE side is flagged are
-    emitted — again INSIDE generation, before any pair row
-    materializes. This is the hook a STREAMING micro-batch needs,
-    where "the batch" is whatever rows arrived, not a modulus of the
-    id. Mutually exclusive with ``pair_filter_sql``.
+    ``batch``: optional BOOLEAN column over ``buckets`` marking the docs
+    of the arriving batch — the incremental-dedup hook. Membership
+    travels with the doc into the grouped list, and only pairs where at
+    least one side is in the batch are emitted, INSIDE generation:
+    old-vs-old pairs are never emitted, shuffled or distinct'ed, so
+    per-batch dedup cost tracks the batch, not the corpus. It must be
+    functional on doc.
 
     ``distinct_pairs=False`` keeps one row per (bucket, pair) instead
     of deduplicating across buckets — for counting consumers
@@ -541,90 +482,47 @@ def _bucket_pairs(
     IS the signal.
 
     ``payload_col``: name of a per-doc column on ``buckets`` to CARRY
-    THROUGH pair generation — output gains ``payload_a`` / ``payload_b``
-    (r13 §2.4: a verify stage that needs each side's signature can then
-    filter pairs in the explode's own stage instead of paying two
-    sort-merge joins of the pair table back against the signature
-    frame; see ``hamming_verified_pairs``). The payload must be
-    FUNCTIONAL on doc (one value per doc) — grouping collects
-    struct(doc, payload) and sorts by the struct, which orders by doc
-    exactly as the bare path because doc is unique per bucket.
-    Composes with ``pair_filter_sql`` (the bare-id references are
-    rewritten onto the struct's doc field, so the same hook text works
-    on both branches — r13: this is what lets the INCREMENTAL dedup
-    servers use the join-free verify too); not with ``flag_col``."""
+    THROUGH pair generation — output gains ``payload_a`` / ``payload_b``,
+    so a verify stage that needs each side's signature filters pairs in
+    the explode's own stage instead of paying two sort-merge joins of
+    the pair table back against the signature frame (see
+    ``minhash_verified_pairs``). The payload must be functional on doc.
+
+    One code path: each bucket collects the bare ``doc`` when there is
+    no batch flag or payload, else ``struct(doc AS d[, flag AS f][,
+    payload AS p])``. Sorting the structs orders by ``d`` first, and a
+    doc appears once per bucket, so every shape emits the bare path's
+    doc order."""
     from ..operators.partitioning import pinned_group_repartition
 
     # pin the grouping exchange's width: AQE sizes it by the grouped
     # BYTES, which underestimates the quadratic pair explode running on
     # top by B(B-1)/2 per bucket — unpinned, the explode serialized on
-    # 1-2 of 32 cores for every small-bucket-table consumer (r13; the
+    # 1-2 of 32 cores for every small-bucket-table consumer (the
     # repartition is REUSED by the groupBy, so no extra shuffle)
     buckets = pinned_group_repartition(buckets, *key_cols)
-    if flag_col is not None:
-        if pair_filter_sql is not None:
-            raise ValueError("pass pair_filter_sql OR flag_col, not both")
-        # struct sorted by (doc, flag): docs are unique per bucket, so
-        # the order is the same doc order the untagged path uses
-        grouped = buckets.groupBy(*key_cols).agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("doc").alias("d"), F.col(flag_col).alias("f"))
-                )
-            ).alias("__ds")
-        )
-        if max_bucket_size is not None:
-            grouped = grouped.where(F.size("__ds") <= max_bucket_size)
-        pair_structs = F.expr(
-            "transform(__ds, (x, i) ->"
-            " transform(filter(slice(__ds, i + 2, size(__ds)),"
-            " y -> (x.f OR y.f)), y -> struct(x.d AS doc_a, y.d AS doc_b)))"
-        )
-        pairs = grouped.select(
-            F.explode(F.flatten(pair_structs)).alias("p")
-        ).select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        return pairs.distinct() if distinct_pairs else pairs
+    fields = [F.col("doc").alias("d")]
+    if batch is not None:
+        fields.append(batch.alias("f"))
     if payload_col is not None:
-        item = F.struct(F.col("doc").alias("d"), F.col(payload_col).alias("p"))
-        collected = F.collect_set(item) if dedup_docs else F.collect_list(item)
-        grouped = buckets.groupBy(*key_cols).agg(
-            F.sort_array(collected).alias("__ds")
-        )
-        if max_bucket_size is not None:
-            grouped = grouped.where(F.size("__ds") <= max_bucket_size)
-        inner = "slice(__ds, i + 2, size(__ds))"
-        if pair_filter_sql is not None:
-            # the hook contract says x/y are the BARE doc ids; on this
-            # branch the lambda variables are (d, p) structs, so the
-            # bare references are rewritten onto the doc field — same
-            # filter, applied at the same point (inside generation,
-            # before any pair materializes)
-            inner = f"filter({inner}, y -> ({_rewrite_pair_filter(pair_filter_sql)}))"
-        pair_structs = F.expr(
-            "transform(__ds, (x, i) ->"
-            f" transform({inner},"
-            " y -> struct(x.d AS doc_a, y.d AS doc_b,"
-            " x.p AS payload_a, y.p AS payload_b)))"
-        )
-        pairs = grouped.select(
-            F.explode(F.flatten(pair_structs)).alias("p")
-        ).select("p.doc_a", "p.doc_b", "p.payload_a", "p.payload_b")
-        return pairs.distinct() if distinct_pairs else pairs
-    collected = F.collect_set("doc") if dedup_docs else F.collect_list("doc")
-    grouped = buckets.groupBy(*key_cols).agg(F.sort_array(collected).alias("__docs"))
+        fields.append(F.col(payload_col).alias("p"))
+    is_struct = len(fields) > 1
+    item = F.struct(*fields) if is_struct else F.col("doc")
+    doc = ".d" if is_struct else ""
+    collected = F.collect_set(item) if dedup_docs else F.collect_list(item)
+    grouped = buckets.groupBy(*key_cols).agg(F.sort_array(collected).alias("__ds"))
     if max_bucket_size is not None:
-        grouped = grouped.where(F.size("__docs") <= max_bucket_size)
-    inner = "slice(__docs, i + 2, size(__docs))"
-    if pair_filter_sql is not None:
-        inner = f"filter({inner}, y -> ({pair_filter_sql}))"
+        grouped = grouped.where(F.size("__ds") <= max_bucket_size)
+    inner = "slice(__ds, i + 2, size(__ds))"
+    if batch is not None:
+        inner = f"filter({inner}, y -> (x.f OR y.f))"
+    emitted = f"x{doc} AS doc_a, y{doc} AS doc_b"
+    if payload_col is not None:
+        emitted += ", x.p AS payload_a, y.p AS payload_b"
     pair_structs = F.expr(
-        "transform(__docs, (x, i) ->"
-        f" transform({inner}, y -> struct(x AS doc_a, y AS doc_b)))"
+        f"transform(__ds, (x, i) -> transform({inner}, y -> struct({emitted})))"
     )
-    pairs = (
-        grouped.select(F.explode(F.flatten(pair_structs)).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-    )
+    pairs = grouped.select(F.explode(F.flatten(pair_structs)).alias("p")).select("p.*")
     return pairs.distinct() if distinct_pairs else pairs
 
 
@@ -635,8 +533,7 @@ def lsh_candidate_pairs(
     bands: int = 4,
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
-    pair_filter_sql: str | None = None,
-    flag_col: str | None = None,
+    batch: Column | None = None,
     carry_sig: bool = False,
 ) -> DataFrame:
     """Banded LSH over MinHash signatures -> distinct candidate pairs
@@ -648,20 +545,15 @@ def lsh_candidate_pairs(
     a self-join — the signature pipeline (tokenize -> shingle -> md5 x k
     -> min-agg) is the expensive stage, and a self-join would compute it
     for both sides; grouping computes it once. Measured ~2x faster at
-    sf0.1 with identical output. ``pair_filter_sql`` (over ``x``/``y``)
-    restricts pairs inside generation — see ``_bucket_pairs``;
-    ``flag_col`` names a boolean batch-membership column on
-    ``signatures`` for DATA-defined batches (stream micro-batches) —
-    only pairs touching a flagged row emit.
+    sf0.1 with identical output. ``batch`` is a boolean over
+    ``signatures``, evaluated once per doc: only pairs touching a doc of
+    the batch are emitted, inside generation (see ``_bucket_pairs``).
 
     ``carry_sig=True`` carries each side's full MinHash signature array
     through pair generation (columns ``sig_a``/``sig_b``, one row per
     (band-bucket, pair) — NOT distinct'ed), so a verification consumer
     scores agreement in the explode's stage instead of joining the pair
-    table back against the signature frame twice (r13 §2.4; see
-    ``_bucket_pairs(payload_col=...)``). Composes with
-    ``pair_filter_sql`` (rewritten onto the carried struct's doc
-    field); not with ``flag_col``."""
+    table back against the signature frame twice."""
     band_hashes = F.array(
         *[
             F.md5(F.concat_ws("|", *[F.col("signature")[b * rows_per_band + r] for r in range(rows_per_band)]))
@@ -685,41 +577,53 @@ def lsh_candidate_pairs(
             )
         ).cast("array<string>"),
     ).otherwise(band_hashes)
-    if carry_sig:
-        if flag_col is not None:
-            raise ValueError("carry_sig does not compose with flag_col")
-        buckets = signatures.select(
-            F.col(id_col).alias("doc"),
-            "signature",
-            F.posexplode(guarded).alias("band", "bucket"),
-        )
-        return _bucket_pairs(
-            buckets,
-            "band",
-            "bucket",
-            max_bucket_size=max_bucket_size,
-            payload_col="signature",
-            pair_filter_sql=pair_filter_sql,
-            distinct_pairs=False,
-        ).select(
-            "doc_a",
-            "doc_b",
-            F.col("payload_a").alias("sig_a"),
-            F.col("payload_b").alias("sig_b"),
-        )
-    extra = [F.col(flag_col)] if flag_col is not None else []
-    buckets = signatures.select(
-        F.col(id_col).alias("doc"),
-        *extra,
+    return _signature_pairs(
+        signatures,
+        id_col,
+        "signature",
         F.posexplode(guarded).alias("band", "bucket"),
-    )
-    return _bucket_pairs(
-        buckets,
-        "band",
-        "bucket",
+        ["band", "bucket"],
         max_bucket_size=max_bucket_size,
-        pair_filter_sql=pair_filter_sql,
-        flag_col=flag_col,
+        batch=batch,
+        carry_sig=carry_sig,
+    )
+
+
+def _signature_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    sig_col: str,
+    keys_gen: Column,
+    key_cols: list[str],
+    *,
+    max_bucket_size: int | None,
+    batch: Column | None,
+    carry_sig: bool,
+) -> DataFrame:
+    """The shared tail of the two LSH families: one (doc, [sig],
+    [batch], key...) bucket row per generated key, then
+    ``_bucket_pairs`` — distinct (doc_a, doc_b), or with ``carry_sig``
+    the undistinct'ed (doc_a, doc_b, sig_a, sig_b) rows."""
+    cols = [F.col(id_col).alias("doc")]
+    if carry_sig:
+        cols.append(F.col(sig_col))
+    if batch is not None:
+        cols.append(batch.alias("__batch"))
+    pairs = _bucket_pairs(
+        sigs.select(*cols, keys_gen),
+        *key_cols,
+        max_bucket_size=max_bucket_size,
+        batch=None if batch is None else F.col("__batch"),
+        payload_col=sig_col if carry_sig else None,
+        distinct_pairs=not carry_sig,
+    )
+    if not carry_sig:
+        return pairs
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        F.col("payload_a").alias("sig_a"),
+        F.col("payload_b").alias("sig_b"),
     )
 
 
@@ -752,8 +656,8 @@ def duplicate_spans(
     aggregate's OUTPUT — no broadcast hint on purpose: in
     boilerplate-heavy web corpora that set is data-sized, and AQE sees
     its true runtime size and picks broadcast vs shuffle-hash correctly
-    (the r5 mis-broadcast lesson in reverse: never *pin* broadcast on a
-    side that scales with the corpus).
+    (never *pin* broadcast on a side that scales with the corpus: a
+    pinned broadcast of a data-sized side is the classic mis-broadcast).
 
     Returns one row per maximal span:
     ``(id, span_start, span_end, span_tokens, n_grams)`` with 1-based
@@ -840,12 +744,12 @@ def duplicate_chunk_removal(
         .where(F.col("__f") > max_doc_freq)
         .select("chunk", F.lit(True).alias("__hot"))
     )
-    # no broadcast hint (was explicit pre-r6): the hot-chunk set is
+    # no broadcast hint: the hot-chunk set is
     # data-DEPENDENT (heavy-tailed, usually tiny, never bounded by
     # construction), and its aggregate sits on honestly-estimated
     # input — so the planner broadcasts locally and flips to SMJ when
     # the hot set genuinely grows, instead of being forced to
-    # broadcast at any size (r6 explicit-broadcast audit)
+    # broadcast at any size
     marked = ex.join(hot, "chunk", "left")
     kept_struct = F.when(
         F.col("__hot").isNull(), F.struct(F.col("chunk_idx"), F.col("chunk"))
@@ -924,7 +828,7 @@ def simhash_candidate_pairs(
     bits: int = 64,
     band_hex_width: int = 4,
     max_bucket_size: int | None = None,
-    pair_filter_sql: str | None = None,
+    batch: Column | None = None,
     carry_sig: bool = False,
 ) -> DataFrame:
     """Near-dup candidates: docs sharing any aligned block of the
@@ -934,21 +838,16 @@ def simhash_candidate_pairs(
     ``substring`` shared by EVERY doc — one universal bucket, silent
     O(n²) pair explosion — so the mismatch is rejected up front.
     ``max_bucket_size`` caps degenerate blocks (e.g. the all-zero block
-    of empty docs), the corpus-scale skew guard. ``pair_filter_sql``
-    (a SQL boolean over ``x``/``y``, the smaller/larger doc id)
-    restricts pairs INSIDE grouped-bucket pair generation — the
-    incremental-dedup hook shared with ``lsh_candidate_pairs``:
-    rejected pairs are never emitted or shuffled (see
-    ``_bucket_pairs``).
+    of empty docs), the corpus-scale skew guard. ``batch`` restricts
+    pairs to those touching the batch, inside generation — the
+    incremental-dedup hook shared with ``lsh_candidate_pairs``.
 
     ``carry_sig=True`` carries each side's full signature through pair
     generation (columns ``sig_a``/``sig_b``, one row per (block, pair)
     — NOT distinct'ed): the exact-verify consumer then computes its
     distance in the explode's own stage and distincts the (smaller)
     verified set, instead of distinct-then-two-sort-merge-joins back
-    against the signature frame (r13 §2.4). Composes with
-    ``pair_filter_sql`` (the bare-id hook is rewritten onto the carried
-    struct's doc field inside ``_bucket_pairs``)."""
+    against the signature frame."""
     hex_chars = bits // 4
     if bits % 4 or hex_chars % band_hex_width:
         raise ValueError(
@@ -971,26 +870,15 @@ def simhash_candidate_pairs(
             )
         ).cast("array<string>"),
     ).otherwise(blocks)
-    if carry_sig:
-        b = sigs.select(
-            F.col(id_col).alias("doc"), "simhash", F.explode(guard).alias("block")
-        )
-        return _bucket_pairs(
-            b,
-            "block",
-            max_bucket_size=max_bucket_size,
-            payload_col="simhash",
-            pair_filter_sql=pair_filter_sql,
-            distinct_pairs=False,
-        ).select(
-            "doc_a",
-            "doc_b",
-            F.col("payload_a").alias("sig_a"),
-            F.col("payload_b").alias("sig_b"),
-        )
-    b = sigs.select(F.col(id_col).alias("doc"), F.explode(guard).alias("block"))
-    return _bucket_pairs(
-        b, "block", max_bucket_size=max_bucket_size, pair_filter_sql=pair_filter_sql
+    return _signature_pairs(
+        sigs,
+        id_col,
+        "simhash",
+        F.explode(guard).alias("block"),
+        ["block"],
+        max_bucket_size=max_bucket_size,
+        batch=batch,
+        carry_sig=carry_sig,
     )
 
 
@@ -1047,7 +935,7 @@ def winnowing_fingerprints(
     shift = 1 << 24
     # the pos-complement pack assumes < 2^24 grams per document; a
     # longer doc would drive the complement negative and silently
-    # corrupt the min-selection (r5 advice) — enforce at runtime, not
+    # corrupt the min-selection — enforce at runtime, not
     # just in the docstring. raise_error's branch types as bigint so
     # the when-chain stays a single codegen expression.
     gram_count = F.when(

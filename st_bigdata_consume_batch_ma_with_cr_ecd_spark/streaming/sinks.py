@@ -280,10 +280,11 @@ def signature_dedup_batch_writer(
        transactional exactly-once);
     3. candidate pairs TOUCHING THE BATCH are generated over the
        post-merge snapshot with the batch membership carried as a
-       boolean flag INTO grouped-bucket pair generation
-       (``lsh_candidate_pairs(flag_col=...)`` — a stream's batch is
-       data-defined, so the id-predicate ``pair_filter_sql`` hook
-       cannot express it); old-vs-old pairs never materialize;
+       boolean column INTO grouped-bucket pair generation
+       (``lsh_candidate_pairs(batch=F.col("__new"))`` — a stream's
+       batch is data-defined, not an id predicate, so the flag comes
+       from a join against the arriving ids); old-vs-old pairs never
+       materialize;
     4. the new pairs MERGE into the verdict table keyed on
        (doc_a, doc_b), partitioned by the epoch that discovered them
        (append-shaped copy-on-write: an epoch's merge writes only its
@@ -348,7 +349,7 @@ def signature_dedup_batch_writer(
             id_col,
             bands=bands,
             rows_per_band=rows_per_band,
-            flag_col="__new",
+            batch=F.col("__new"),
         ).withColumn("found_epoch", F.lit(int(epoch_id)).cast("bigint"))
         if not list_versions(spark, pairs_table):
             create_versioned_table(pairs, pairs_table, ["found_epoch"])

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm.dedup import (
@@ -4192,7 +4192,7 @@ def image_dhash_verified_pairs(
     n_patterns: int = 37,
     band_hex_width: int = 2,
     max_hamming: int = 7,
-    pair_filter_sql: str | None = None,
+    batch: Column | None = None,
 ) -> DataFrame:
     """The real-bytes image near-dedup chain shared by the registered
     image-dedup queries AND the scale probe: synthesize the
@@ -4207,7 +4207,8 @@ def image_dhash_verified_pairs(
     it WITH the amplification so cluster sizes stay constant and pair
     volume stays linear — amplifying docs against a fixed pattern count
     would densify every cluster and measure the quadratic true-pair
-    growth of the fixture, not the plan."""
+    growth of the fixture, not the plan. ``batch`` restricts pairs to
+    those touching the batch (see ``hamming_verified_pairs``)."""
     # checkpoint: the signature frame feeds blocking AND verify
     sigs = image_dhash_signatures(docs, n_patterns=n_patterns).localCheckpoint(
         eager=True
@@ -4217,7 +4218,7 @@ def image_dhash_verified_pairs(
         "dhash",
         band_hex_width=band_hex_width,
         max_hamming=max_hamming,
-        pair_filter_sql=pair_filter_sql,
+        batch=batch,
     )
 
 
@@ -4227,8 +4228,7 @@ def hamming_verified_pairs(
     *,
     band_hex_width: int,
     max_hamming: int,
-    pair_filter_sql: str | None = None,
-    join_back_verify: bool = False,
+    batch: Column | None = None,
 ) -> DataFrame:
     """The shared LSH -> exact-verify tail over any (doc_id, <sig_col>)
     64-bit hex signature frame — image dHash and audio energy-contour
@@ -4244,20 +4244,20 @@ def hamming_verified_pairs(
     blocks >= max_hamming + 1. 2->(8 blocks, <=7); 4->(4 blocks, <=3).
     ValueError, not assert: under `python -O` an assert is compiled
     away and an inconsistent pair would silently DROP true near-dup
-    pairs instead of failing loudly (r7 ADVICE).
+    pairs instead of failing loudly.
 
-    ``pair_filter_sql`` (a SQL boolean over ``x``/``y``, the smaller/
-    larger doc id) restricts pairs INSIDE grouped-bucket pair
-    generation — the incremental-dedup hook (r8 verdict ask #5),
-    identical to the MinHash path's: pairs the filter rejects are
-    never emitted, shuffled, or verify-joined, so per-batch dedup cost
-    tracks the batch, not the corpus.
+    ``batch`` (a boolean over ``sigs``, evaluated once per doc)
+    restricts pairs to those touching the batch INSIDE grouped-bucket
+    pair generation — the incremental-dedup hook, identical to the
+    MinHash path's: pairs it rejects are never emitted, shuffled, or
+    verified, so per-batch dedup cost tracks the batch, not the corpus.
 
-    ``join_back_verify=True`` forces the legacy shape (distinct the
-    candidate ids, then two sort-merge joins back against the
-    signature frame to fetch each side) — kept ONLY as the equivalence
-    baseline the carry-path pytest compares against; every production
-    caller takes the default carry path."""
+    Each side's 16-hex signature rides through pair generation, so the
+    exact verify runs in the explode's own stage and the distinct
+    dedups the (smaller) VERIFIED set — no distinct-then-two-sort-
+    merge-joins back against the signature frame. Hamming is
+    functional on the pair, so distinct(doc_a, doc_b, hamming) of the
+    filtered multiset equals the distinct verified pairs."""
     from ..llm.dedup import simhash_candidate_pairs
 
     if 64 // (4 * band_hex_width) < max_hamming + 1:
@@ -4271,53 +4271,21 @@ def hamming_verified_pairs(
         xb = F.conv(F.substring(b, start, 8), 16, 10).cast("long")
         return F.bit_count(xa.bitwiseXOR(xb))
 
-    if not join_back_verify:
-        # CARRY path (r13, guide §2.4): each side's 16-hex signature
-        # rides through pair generation, so the exact verify runs in
-        # the explode's own stage and the distinct dedups the (smaller)
-        # VERIFIED set — replacing the old distinct-then-two-sort-merge-
-        # joins shape (4 exchanges + 2 sorts on the pair table -> 2
-        # exchanges). Equivalence: hamming is functional on the pair,
-        # so distinct(doc_a, doc_b, hamming) of the filtered multiset
-        # = filter of the old distinct(doc_a, doc_b) + join + compute.
-        # The incremental hook composes since r13: the bare-id filter
-        # is rewritten onto the carried struct inside _bucket_pairs.
-        cands = simhash_candidate_pairs(
-            sigs.select("doc_id", F.col(sig_col).alias("simhash")),
-            bits=64,
-            band_hex_width=band_hex_width,
-            pair_filter_sql=pair_filter_sql,
-            carry_sig=True,
-        )
-        hamming = (
-            _half_ham(F.col("sig_a"), F.col("sig_b"), 1)
-            + _half_ham(F.col("sig_a"), F.col("sig_b"), 9)
-        ).cast("int")
-        return (
-            cands.select("doc_a", "doc_b", hamming.alias("hamming"))
-            .where(F.col("hamming") <= max_hamming)
-            .distinct()
-        )
     cands = simhash_candidate_pairs(
-        sigs.select("doc_id", F.col(sig_col).alias("simhash")),
+        sigs.withColumn("simhash", F.col(sig_col)),
         bits=64,
         band_hex_width=band_hex_width,
-        pair_filter_sql=pair_filter_sql,
+        batch=batch,
+        carry_sig=True,
     )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col(sig_col).alias("__ha"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col(sig_col).alias("__hb"))
     hamming = (
-        _half_ham(F.col("__ha"), F.col("__hb"), 1)
-        + _half_ham(F.col("__ha"), F.col("__hb"), 9)
+        _half_ham(F.col("sig_a"), F.col("sig_b"), 1)
+        + _half_ham(F.col("sig_a"), F.col("sig_b"), 9)
     ).cast("int")
-    # merge pins: sigs is a corpus-signature checkpoint — same
-    # non-demotable checkpoint-broadcast hazard as the text verify
-    # joins (SCALE.md round 6)
     return (
-        cands.join(sa.hint("merge"), "doc_a")
-        .join(sb.hint("merge"), "doc_b")
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
+        cands.select("doc_a", "doc_b", hamming.alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
+        .distinct()
     )
 
 
@@ -4551,7 +4519,7 @@ def audio_contour_verified_pairs(
     n_patterns: int = 37,
     band_hex_width: int = 4,
     max_hamming: int = 3,
-    pair_filter_sql: str | None = None,
+    batch: Column | None = None,
 ) -> DataFrame:
     """The real-bytes audio near-dedup chain shared by the registered
     audio-dedup queries AND the scale probe: synthesize a deterministic
@@ -4564,13 +4532,15 @@ def audio_contour_verified_pairs(
     contour (llm/multimodal.audio_contour_signature — sign-of-delta
     bits, the audio analogue of dHash), and feed the shared wide-block
     Hamming LSH + exact-verify tail. WIDE BLOCKS FROM BIRTH
-    (band_hex_width=4, hamming <= 3): the r7 image probe measured the
-    8-bit-key blocking corpus-quadratic, so the audio path never ships
-    the saturating key choice. Returns (doc_a, doc_b, hamming).
+    (band_hex_width=4, hamming <= 3): the image scale probe measured
+    the 8-bit-key blocking corpus-quadratic, so the audio path never
+    ships the saturating key choice. Returns (doc_a, doc_b, hamming).
+    ``batch`` restricts pairs to those touching the batch (see
+    ``hamming_verified_pairs``).
 
     ``n_patterns`` scales WITH the probe's amplification so cluster
-    sizes stay constant and pair volume stays linear (the r7
-    image-probe trick)."""
+    sizes stay constant and pair volume stays linear (the same trick
+    as the image probe)."""
     sigs = audio_contour_signatures(docs, n_patterns=n_patterns).localCheckpoint(
         eager=True
     )  # feeds blocking + verify
@@ -4579,7 +4549,7 @@ def audio_contour_verified_pairs(
         "sig",
         band_hex_width=band_hex_width,
         max_hamming=max_hamming,
-        pair_filter_sql=pair_filter_sql,
+        batch=batch,
     )
 
 
@@ -4771,7 +4741,6 @@ def dedup_audio_contour_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # established); the oracle applies the SAME restriction to the quadratic
 # pair scan, so the hash pins "new-vs-corpus and new-vs-new, never
 # old-vs-old" exactly
-_INCR_BATCH_SQL = "x % 5 = 0 OR y % 5 = 0"
 _INCR_BATCH_ORACLE = "AND (doc_a % 5 = 0 OR doc_b % 5 = 0)"
 
 
@@ -4782,12 +4751,13 @@ _INCR_BATCH_ORACLE = "AND (doc_a % 5 = 0 OR doc_b % 5 = 0)"
     SELECT doc_a, doc_b, hamming FROM img_pairs
     """,
     doc="INCREMENTAL image near-dedup (the nightly-ingest shape of the "
-    "wide-block dHash chain — r8 verdict ask #5, mirroring "
-    "dedup_incremental_minhash): candidate pairs are restricted to "
-    "those touching the NEW batch (doc_id % 5 = 0 as the arrival "
-    "stand-in) INSIDE grouped-bucket pair generation — a filter() in "
+    "wide-block dHash chain, mirroring dedup_incremental_minhash): "
+    "candidate pairs are restricted to those touching the NEW batch "
+    "(batch=doc_id % 5 = 0 as the arrival stand-in, a boolean column "
+    "evaluated once per signature and carried with the doc into its "
+    "buckets) INSIDE grouped-bucket pair generation — a filter() in "
     "the upper-triangle transform — so old-vs-old pairs are never "
-    "emitted, shuffled, or verify-joined, and per-batch dedup cost "
+    "emitted, shuffled, or verified, and per-batch dedup cost "
     "tracks the batch, not the corpus. Same real BMP decode -> resize "
     "-> dHash -> wide-block Hamming LSH (4x16-bit keys, hamming <= 3) "
     "-> exact verify as the full-corpus chain; at 100 TB the historic "
@@ -4801,7 +4771,7 @@ def dedup_image_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
         _docs(spark, sf_dir),
         band_hex_width=4,
         max_hamming=3,
-        pair_filter_sql=_INCR_BATCH_SQL,
+        batch=F.col("doc_id") % 5 == 0,
     )
 
 
@@ -4811,12 +4781,12 @@ def dedup_image_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     WITH {_audio_contour_ctes(3).replace("WHERE hamming <= 3", f"WHERE hamming <= 3 {_INCR_BATCH_ORACLE}")}
     SELECT doc_a, doc_b, hamming FROM audio_pairs
     """,
-    doc="INCREMENTAL audio near-dedup (r8 verdict ask #5): the "
+    doc="INCREMENTAL audio near-dedup: the "
     "energy-contour signature chain (real WAV decode -> 16-sample "
     "window energies -> 64 gradient-sign bits -> wide-block Hamming "
     "LSH -> exact verify) with candidate pairs restricted to those "
-    "touching the NEW batch (doc_id % 5 = 0) inside grouped-bucket "
-    "pair generation — the same incremental hook as the MinHash and "
+    "touching the NEW batch (batch=doc_id % 5 = 0) inside "
+    "grouped-bucket pair generation — the same batch hook as the MinHash and "
     "image twins, so a nightly audio ingest pays pair cost "
     "proportional to the batch while old-vs-old pairs never "
     "materialize. The quadratic oracle replays the whole chain "
@@ -4824,7 +4794,7 @@ def dedup_image_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def dedup_audio_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_contour_verified_pairs(
-        _docs(spark, sf_dir), pair_filter_sql=_INCR_BATCH_SQL
+        _docs(spark, sf_dir), batch=F.col("doc_id") % 5 == 0
     )
 
 
@@ -4890,7 +4860,7 @@ def dedup_image_incremental_served(spark: SparkSession, sf_dir: str) -> DataFram
         "dhash",
         band_hex_width=4,
         max_hamming=3,
-        pair_filter_sql=_INCR_BATCH_SQL,
+        batch=F.col("doc_id") % 5 == 0,
     )
 
 
@@ -4920,7 +4890,7 @@ def dedup_audio_incremental_served(spark: SparkSession, sf_dir: str) -> DataFram
         "sig",
         band_hex_width=4,
         max_hamming=3,
-        pair_filter_sql=_INCR_BATCH_SQL,
+        batch=F.col("doc_id") % 5 == 0,
     )
 
 
@@ -5234,7 +5204,7 @@ def factory_multimodal_nightly(
             "dhash",
             band_hex_width=4,
             max_hamming=3,
-            pair_filter_sql=_INCR_BATCH_SQL,
+            batch=F.col("doc_id") % 5 == 0,
         )
     )
     aud_dups = _near_dup_later_side(
@@ -5243,7 +5213,7 @@ def factory_multimodal_nightly(
             "asig",
             band_hex_width=4,
             max_hamming=3,
-            pair_filter_sql=_INCR_BATCH_SQL,
+            batch=F.col("doc_id") % 5 == 0,
         )
     )
     batch_q = (
@@ -5562,7 +5532,7 @@ def corpus_multimodal_incremental_summary(spark: SparkSession, sf_dir: str) -> D
             sig_col,
             band_hex_width=4,
             max_hamming=3,
-            pair_filter_sql=_INCR_BATCH_SQL,
+            batch=F.col("doc_id") % 5 == 0,
         )
         stored = cl_store.serve()
         star = stored.where(F.col("doc_id") != F.col("cluster_id")).select(
@@ -6511,10 +6481,11 @@ def _minhash_incremental_oracle() -> str:
     doc="Incremental near-dedup (the nightly-ingest shape): candidate "
     "pairs restricted to those touching the NEW batch (doc_id % 5 = 0 as "
     "the arrival stand-in) — new-vs-corpus and new-vs-new, never "
-    "old-vs-old. The restriction applies INSIDE grouped-bucket pair "
+    "old-vs-old. The restriction is a boolean batch column evaluated "
+    "once per signature and applied INSIDE grouped-bucket pair "
     "generation (a filter() in the upper-triangle transform), so "
-    "rejected pairs are never emitted or shuffled: per-batch dedup cost "
-    "tracks the batch, not the corpus. In production the historic "
+    "rejected pairs are never emitted or shuffled: per-batch dedup "
+    "cost tracks the batch, not the corpus. In production the historic "
     "signatures are read from a stored signature table instead of "
     "recomputed — the banding/bucketing/pair machinery is identical.",
 )
@@ -6525,7 +6496,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_BANDS,
         rows_per_band=_ROWS_PER_BAND,
         max_bucket_size=_MINHASH_BUCKET_CAP,
-        pair_filter_sql="x % 5 = 0 OR y % 5 = 0",
+        batch=F.col("doc_id") % 5 == 0,
     )
 
 
@@ -6563,7 +6534,7 @@ def dedup_minhash_incremental_served(spark: SparkSession, sf_dir: str) -> DataFr
         bands=_BANDS,
         rows_per_band=_ROWS_PER_BAND,
         max_bucket_size=_MINHASH_BUCKET_CAP,
-        pair_filter_sql="x % 5 = 0 OR y % 5 = 0",
+        batch=F.col("doc_id") % 5 == 0,
     )
 
 
@@ -6592,9 +6563,9 @@ def _minhash_uncapped_oracle() -> str:
     "idempotent version (txn=(app, epoch) — replay-safe), and "
     "generates candidate pairs TOUCHING THE BATCH over the post-merge "
     "snapshot with batch membership carried as a boolean flag INSIDE "
-    "grouped-bucket pair generation (lsh_candidate_pairs(flag_col=) — "
-    "a stream's batch is data-defined, so no id predicate can express "
-    "it); discovered pairs MERGE into an epoch-partitioned verdict "
+    "grouped-bucket pair generation (lsh_candidate_pairs(batch=) over "
+    "the boolean arrival column — a stream's batch is data-defined, so "
+    "no id predicate can express it); discovered pairs MERGE into an epoch-partitioned verdict "
     "table. The oracle is the plain full-corpus batch recompute: with "
     "unique ids, every true pair is discovered exactly once (at its "
     "later side's arrival), so the drained verdict table must equal "

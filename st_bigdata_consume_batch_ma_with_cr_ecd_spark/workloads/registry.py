@@ -123,8 +123,9 @@ FORCE_RECHECK: dict[str, int] = {
     "pipeline_corpus_factory_nightly": 14,
     "streaming_corpus_factory": 14,
     # - the ngram overlap-counts family dropped the r13 exchange-width
-    #   pin on its materialize path (the r13 verdict's one real
-    #   regression; unpinned A/B 4.41->3.07 s / 3.00->2.50 s):
+    #   pin ahead of its checkpointed shingle grouping (the one real
+    #   regression of the r13 pins; unpinned A/B 4.41->3.07 s /
+    #   3.00->2.50 s):
     "dedup_ngram_jaccard": 14,
     "dedup_ngram_jaccard_pruned": 14,
     "dedup_ngram_containment": 14,

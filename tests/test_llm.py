@@ -1623,11 +1623,13 @@ def test_unigram_train_pruned_matches_python_reference(spark):
     assert all(c in got and got[c] >= 1 for c in chars)
 
 
-def test_flagged_pair_generation_equals_id_predicate(spark, sf_dir):
-    # lsh_candidate_pairs(flag_col=...) with flags matching an id
-    # predicate must emit exactly the pair_filter_sql pairs — the two
-    # batch-restriction hooks are semantically one mechanism
+def test_batch_restricted_pairs_equal_filtered_unrestricted_pairs(spark, sf_dir):
+    # the batch hook restricts pairs INSIDE generation; the result must
+    # equal the unrestricted pairs filtered to those touching the batch
+    # (doc_a % 5 = 0 OR doc_b % 5 = 0) — on the bare path, the
+    # signature-carrying path and the collect_set (dedup_docs) path
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.llm.dedup import (
+        _bucket_pairs,
         lsh_candidate_pairs,
         minhash_signatures,
     )
@@ -1635,30 +1637,47 @@ def test_flagged_pair_generation_equals_id_predicate(spark, sf_dir):
         read_testdata,
     )
 
+    def touching(rows):
+        return sorted(r for r in rows if r[0] % 5 == 0 or r[1] % 5 == 0)
+
+    def rows_of(df):
+        return [
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.collect()
+        ]
+
     docs = read_testdata(spark, sf_dir, "documents").select("doc_id", "text")
     sigs = minhash_signatures(docs, k_shingle=3, num_hashes=16).localCheckpoint(
         eager=True
     )
-    by_pred = sorted(
-        map(tuple, lsh_candidate_pairs(
-            sigs, pair_filter_sql="x % 5 = 0 OR y % 5 = 0"
-        ).collect())
-    )
-    flagged = sigs.withColumn("__new", F.col("doc_id") % 5 == 0)
-    by_flag = sorted(
-        map(tuple, lsh_candidate_pairs(
-            flagged.select("doc_id", "signature", "__new"), flag_col="__new"
-        ).collect())
-    )
-    assert by_flag == by_pred and by_flag
-    import pytest as _pytest
+    batch = F.col("doc_id") % 5 == 0
+    for carry_sig in (False, True):
+        full = rows_of(lsh_candidate_pairs(sigs, carry_sig=carry_sig))
+        got = sorted(rows_of(lsh_candidate_pairs(sigs, batch=batch, carry_sig=carry_sig)))
+        assert got == touching(full) and got and len(got) < len(full), carry_sig
 
-    with _pytest.raises(ValueError):
-        lsh_candidate_pairs(
-            flagged.select("doc_id", "signature", "__new"),
-            flag_col="__new",
-            pair_filter_sql="x % 5 = 0",
+    rows = [
+        ("b1", 1), ("b1", 2), ("b1", 2), ("b1", 5), ("b1", 10), ("b1", 3),
+        ("b2", 5), ("b2", 6), ("b2", 6), ("b2", 7),
+        ("b3", 11), ("b3", 12),
+    ]
+    buckets = spark.createDataFrame(rows, "k string, doc long")
+    for distinct_pairs in (True, False):
+        full = rows_of(
+            _bucket_pairs(buckets, "k", distinct_pairs=distinct_pairs, dedup_docs=True)
         )
+        got = sorted(
+            rows_of(
+                _bucket_pairs(
+                    buckets,
+                    "k",
+                    batch=F.col("doc") % 5 == 0,
+                    distinct_pairs=distinct_pairs,
+                    dedup_docs=True,
+                )
+            )
+        )
+        assert got == touching(full) and got and len(got) < len(full), distinct_pairs
 
 
 def test_bucket_pairs_dedup_docs_equals_upstream_distinct(spark):
@@ -1688,39 +1707,55 @@ def test_bucket_pairs_dedup_docs_equals_upstream_distinct(spark):
         assert got == want and got, distinct_pairs
 
 
-def test_hamming_carry_path_equals_join_path(spark, sf_dir):
-    # r13 optimization: hamming_verified_pairs carries each side's
-    # signature through pair generation and verifies in the explode's
-    # stage (no join-back) — on BOTH the unfiltered and the
-    # incremental (pair_filter_sql) paths, the latter via the bare-id
-    # -> struct-field rewrite inside _bucket_pairs. join_back_verify
-    # forces the legacy distinct -> two sort-merge-joins shape over
-    # the SAME sigs as the equivalence baseline; all shapes must emit
-    # identical (doc_a, doc_b, hamming) sets, for both block widths.
+def test_hamming_verified_pairs_equal_brute_force(spark, sf_dir):
+    # hamming_verified_pairs against an all-pairs Python Hamming scan of
+    # the same signatures: independent of the LSH blocking, so it also
+    # checks that both block widths are pigeonhole-complete — with and
+    # without the batch restriction
+    import random
+
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.llm import (
         _docs,
         hamming_verified_pairs,
         image_dhash_signatures,
     )
 
-    sigs = image_dhash_signatures(
-        _docs(spark, sf_dir).where("doc_id < 400")
-    ).localCheckpoint(eager=True)
-    for flt in (None, "x % 5 = 0 OR y % 5 = 0"):
+    # boundary pairs for each width: max_hamming flipped bits, one per
+    # block, so the pair shares exactly one block — each block position
+    # in turn. The fixture's near-dups share most blocks and would not
+    # notice a block the banding skipped.
+    rng = random.Random(7)
+    boundary, doc = [], 10_000
+    for n_blocks, block_bits in ((8, 8), (4, 16)):
+        for keep in range(n_blocks):
+            base = other = rng.getrandbits(64)
+            for blk in range(n_blocks):
+                if blk != keep:
+                    other ^= 1 << (64 - (blk + 1) * block_bits + rng.randrange(block_bits))
+            boundary += [(doc, f"{base:016x}"), (doc + 1, f"{other:016x}")]
+            doc += 2
+    sigs = (
+        image_dhash_signatures(_docs(spark, sf_dir).where("doc_id < 400"))
+        .unionByName(spark.createDataFrame(boundary, "doc_id long, dhash string"))
+        .localCheckpoint(eager=True)
+    )
+    local = sorted((r["doc_id"], int(r["dhash"], 16)) for r in sigs.collect())
+    for restricted in (False, True):
         for bw, mh in ((2, 7), (4, 3)):
-            carry = sorted(
+            want = sorted(
+                (a, b, h)
+                for i, (a, sa) in enumerate(local)
+                for b, sb in local[i + 1 :]
+                if (h := bin(sa ^ sb).count("1")) <= mh
+                and (not restricted or a % 5 == 0 or b % 5 == 0)
+            )
+            got = sorted(
                 map(tuple, hamming_verified_pairs(
                     sigs, "dhash", band_hex_width=bw, max_hamming=mh,
-                    pair_filter_sql=flt,
+                    batch=(F.col("doc_id") % 5 == 0) if restricted else None,
                 ).collect())
             )
-            joined = sorted(
-                map(tuple, hamming_verified_pairs(
-                    sigs, "dhash", band_hex_width=bw, max_hamming=mh,
-                    pair_filter_sql=flt, join_back_verify=True,
-                ).collect())
-            )
-            assert carry == joined and carry, (flt, bw, mh)
+            assert got == want and got, (restricted, bw, mh)
 
 
 def test_streaming_dedup_split_invariant_and_equals_batch(spark, sf_dir, tmp_path):
@@ -2265,27 +2300,3 @@ def test_reweighted_packed_adc_query_cells_override(spark, sf_dir):
     assert sorted(map(tuple, default.collect())) == sorted(
         map(tuple, overridden.collect())
     )
-
-
-def test_rewrite_pair_filter_rejects_out_of_contract_hooks():
-    # the carry-path hook rewrite is textual (r13 ADVICE): quoted
-    # spans and uppercase bare X/Y would silently diverge between the
-    # carry and join-back branches, so they must fail loudly; the
-    # documented lowercase-bare-id form must rewrite onto the struct
-    # doc fields exactly once per id.
-    import pytest as _pytest
-
-    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.llm.dedup import (
-        _rewrite_pair_filter,
-    )
-
-    assert (
-        _rewrite_pair_filter("x % 5 = 0 OR y % 5 = 0")
-        == "x.d % 5 = 0 OR y.d % 5 = 0"
-    )
-    # names merely containing the letters stay untouched
-    assert _rewrite_pair_filter("max(x, y) < xy") == "max(x.d, y.d) < xy"
-    with _pytest.raises(ValueError, match="string literals"):
-        _rewrite_pair_filter("x IN ('x')")
-    with _pytest.raises(ValueError, match="lowercase"):
-        _rewrite_pair_filter("X % 5 = 0")

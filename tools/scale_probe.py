@@ -323,14 +323,14 @@ def probes(
             "noop"
         ).mode("overwrite").save()
 
-    # incremental modal dedup twins (r8 verdict ask #5): the corpus
-    # grows with the mult but the ARRIVING BATCH stays a constant
-    # absolute size (doc_id % (5 * mult) = 0 — the same 1/(5*mult)
-    # fraction of a mult-times-larger corpus), so the pair stage's
-    # cost must stay flat while the signature stage scans the corpus
-    # linearly (at 100 TB the historic signatures come from a stored
-    # table; the probe measures the pair machinery, which is the part
-    # that would otherwise go quadratic).
+    # incremental modal dedup twins: the corpus grows with the mult
+    # but the ARRIVING BATCH stays a constant absolute size (doc_id %
+    # (5 * mult) = 0 — the same 1/(5*mult) fraction of a
+    # mult-times-larger corpus), so the pair stage's cost must stay
+    # flat while the signature stage scans the corpus linearly (at 100
+    # TB the historic signatures come from a stored table; the probe
+    # measures the pair machinery, which is the part that would
+    # otherwise go quadratic).
     def image_incr_compute() -> None:
         docs_i = amplify(docs_tbl, mult, ["doc_id"])
         image_dhash_verified_pairs(
@@ -338,7 +338,7 @@ def probes(
             n_patterns=37 * mult,
             band_hex_width=4,
             max_hamming=3,
-            pair_filter_sql=f"x % {5 * mult} = 0 OR y % {5 * mult} = 0",
+            batch=F.col("doc_id") % (5 * mult) == 0,
         ).write.format("noop").mode("overwrite").save()
 
     def audio_incr_compute() -> None:
@@ -350,7 +350,7 @@ def probes(
         audio_contour_verified_pairs(
             docs_i,
             n_patterns=37 * mult,
-            pair_filter_sql=f"x % {5 * mult} = 0 OR y % {5 * mult} = 0",
+            batch=F.col("doc_id") % (5 * mult) == 0,
         ).write.format("noop").mode("overwrite").save()
 
     # SERVED incremental dedup (r9 verdict ask #1's measurement): the
@@ -416,7 +416,7 @@ def probes(
                 sig_col,
                 band_hex_width=4,
                 max_hamming=3,
-                pair_filter_sql=f"x % {5 * mult} = 0 OR y % {5 * mult} = 0",
+                batch=F.col("doc_id") % (5 * mult) == 0,
             ).write.format("noop").mode("overwrite").save()
 
         return compute
@@ -486,7 +486,7 @@ def probes(
                 "dhash",
                 band_hex_width=4,
                 max_hamming=3,
-                pair_filter_sql=f"x % {5 * mult} = 0 OR y % {5 * mult} = 0",
+                batch=F.col("doc_id") % (5 * mult) == 0,
             ).write.format("noop").mode("overwrite").save()
 
     # IVF SERVING alone (r9 verdict ask #3: the stored-index queries
@@ -1563,7 +1563,8 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         # table — zero python decode stages (a MapInPandas anywhere
         # below the pair tail means historic payloads are being
         # re-decoded at query time, the exact weakness the served
-        # design closes) — and the verify joins must keep their pins
+        # design closes) — and the exact verify must stay join-free
+        # (signatures carried through pair generation)
         from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sinks.versioned import (
             merge_versioned_table,
             read_versioned_table,
@@ -1596,7 +1597,7 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
             "dhash",
             band_hex_width=4,
             max_hamming=3,
-            pair_filter_sql=f"x % {5 * mult} = 0 OR y % {5 * mult} = 0",
+            batch=F.col("doc_id") % (5 * mult) == 0,
         )
         plan = final_plan(df)
         assert "Scan parquet" in plan, "served pairs lost their parquet scan"
@@ -1605,7 +1606,8 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
                 f"served pair plan contains {py_node} at mult={mult} — "
                 "historic payloads re-decoded at query time"
             )
-        assert "SortMergeJoin" in plan, "served verify joins lost their pins"
+        for join in ("SortMergeJoin", "BroadcastHashJoin"):
+            assert join not in plan, f"served verify re-grew a {join}"
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert_no_checkpoint_broadcasts(plan, "image_served")
@@ -1646,11 +1648,12 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         assert "BroadcastNestedLoopJoin" not in plan
         assert "WindowGroupLimit" in plan, "IVF top-k lost its partial group limit"
 
-    def incr_pair_filter_inside_generation() -> None:
+    def incr_batch_inside_generation() -> None:
         # the incremental twins must keep the batch restriction INSIDE
-        # grouped-bucket pair generation — a Filter above a Generate,
-        # never a join against a batch table (the dedup_incremental_
-        # minhash contract, now on the Hamming path)
+        # grouped-bucket pair generation — a filter() in the pair
+        # transform over the carried batch flag, never a join against
+        # a batch table (the dedup_incremental_minhash contract, on the
+        # Hamming path)
         from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.llm import (
             image_dhash_verified_pairs,
         )
@@ -1666,7 +1669,7 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
                 n_patterns=37 * mult,
                 band_hex_width=4,
                 max_hamming=3,
-                pair_filter_sql=f"x % {5 * mult} = 0 OR y % {5 * mult} = 0",
+                batch=F.col("doc_id") % (5 * mult) == 0,
             )
         )
         assert "CartesianProduct" not in plan
@@ -1675,10 +1678,10 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
 
     def image_dedup_k3_pins_hold() -> None:
         # the wide-block scale path at the audit mult: the dHash
-        # signature checkpoint feeds blocking AND both verify sides, so
-        # the verify joins must keep their merge pins (bare checkpoint
-        # scan = non-demotable broadcast class), and the banding must
-        # never degrade to a cartesian
+        # signatures ride through pair generation, so the exact verify
+        # must stay join-free (a join back against the bare checkpoint
+        # scan would be the non-demotable broadcast class), and the
+        # banding must never degrade to a cartesian
         from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.llm import (
             image_dhash_verified_pairs,
         )
@@ -1692,7 +1695,8 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
             docs_a, n_patterns=37 * mult, band_hex_width=4, max_hamming=3
         )
         plan = final_plan(df)
-        assert "SortMergeJoin" in plan, "image verify joins lost their merge pins"
+        for join in ("SortMergeJoin", "BroadcastHashJoin"):
+            assert join not in plan, f"image verify re-grew a {join}"
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert_no_checkpoint_broadcasts(plan, "image_dedup_k3")
@@ -1895,7 +1899,7 @@ def plan_audits(spark: SparkSession, sf_dir: str, mult: int) -> dict[str, object
         "image_pipeline_k3": image_pipeline_k3_pins_hold,
         "audio_dedup": audio_dedup_pins_hold,
         "multimodal_summary": multimodal_summary_pins_hold,
-        "image_incr": incr_pair_filter_inside_generation,
+        "image_incr": incr_batch_inside_generation,
         "image_served": image_served_plan_is_parquet_fed,
         "ivf_served": ivf_served_no_corpus_side,
         "factory_nightly": factory_nightly_pins_hold,
