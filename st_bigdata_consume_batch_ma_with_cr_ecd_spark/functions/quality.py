@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 VIOLATIONS_COL = "__violations"
@@ -39,7 +39,7 @@ def quarantine_split(df: DataFrame, rules: Mapping[str, Column]) -> tuple[DataFr
     return labeled.where(ok).drop(VIOLATIONS_COL), labeled.where(~ok)
 
 
-def with_observed_metrics(df: DataFrame, name: str, **metrics: Column) -> DataFrame:
+def with_observed_metrics(df: DataFrame, name: str | Observation, **metrics: Column) -> DataFrame:
     """Attach streaming/batch-safe in-flight metrics (``df.observe``):
     aggregates computed DURING the action that consumes ``df``, for free
     — no second scan, unlike a separate ``.agg().collect()`` audit pass.

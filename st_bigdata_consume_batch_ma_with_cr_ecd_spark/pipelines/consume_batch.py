@@ -30,8 +30,9 @@ Stage map (reference citations):
   loop with UNION ALL accumulation (script/main.py:300-368), as one
   lazy pass over all four slices
 - ``run_job``            — the nightly job run end to end: stage 0
-  staged to parquet, the one-pass slice frame cached and sunk to
-  per-slice CSV/JSON, the parquet sink (script/main.py:300-416)
+  staged to parquet, the one-pass slice frame written once as the
+  parquet sink, per-slice CSV/JSON derived from that write, all three
+  sinks published together (script/main.py:300-416)
 
 The reference runs stages 1-3 once per slice. Here the slice key is one
 more column in every window partition, group-by and join key of those
@@ -48,19 +49,22 @@ dropped (inner as-of join); ``fraudLevelId <= 0`` drops null-fraud rows.
 from __future__ import annotations
 
 import operator
+import os
+import shutil
 from collections.abc import Sequence
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from datetime import date, timedelta
 from functools import reduce
 from itertools import combinations
+from pathlib import Path
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.columns import prefix_select, strip_prefix
 from ..functions.maps import keyed_map_column
 from ..functions.nesting import nest_columns
+from ..functions.quality import with_observed_metrics
 from ..functions.whenchain import when_chain
 from ..operators.asof import asof_join
 from ..operators.dedup import top_n_per_group
@@ -135,6 +139,11 @@ class SliceSpec:
         if self.distribution_type == "BUY":
             return "cleaned_classified_prices_buy_price_amount"
         return "cleaned_classified_prices_rent_baseRent_amount"
+
+    @property
+    def tag(self) -> str:
+        """The slice's name in the text sinks' paths and the row counts."""
+        return f"{self.geoid}_{self.distribution_type}"
 
 
 DEFAULT_SLICES = tuple(
@@ -523,42 +532,15 @@ def prepare_job(tables: dict[str, DataFrame], dates: JobDates, out_root: str) ->
     return tables["changelog"].sparkSession.read.parquet(staging)
 
 
-def run_slices_concurrent(
-    tables: dict[str, DataFrame],
-    merged: DataFrame,
-    dates: JobDates,
-    out_root: str,
-    *,
-    json_clock: str | None = None,
-) -> tuple[DataFrame, dict[str, int]]:
-    """Build all :data:`DEFAULT_SLICES` as one frame with
-    :func:`build_slices` on the staged ``merged``, cache it, count
-    every slice with one grouped count, and sink each slice to
-    single-file gzip CSV + gzip JSON from a filter of the cache. The
-    eight single-task gzip writes run from a driver thread pool: Spark
-    schedules jobs from several threads onto one session, so they
-    overlap instead of running in the reference's serial loop.
+def _slice_tag(distribution: Column) -> Column:
+    """A row's :attr:`SliceSpec.tag`, from its ``partitionGeoid``."""
+    return F.concat_ws("_", F.col("partitionGeoid").cast("string"), distribution)
 
-    Returns the cached frame, which the caller sinks and unpersists,
-    and the row count of each slice by its tag (0 for an empty slice)."""
-    frame = build_slices(merged, tables, DEFAULT_SLICES, dates).cache()
-    geoid, dist = F.col("partitionGeoid"), F.col("classified_distributionType")
-    counts = {f"{spec.geoid}_{spec.distribution_type}": 0 for spec in DEFAULT_SLICES}
-    for g, d, n in frame.groupBy(geoid, dist).count().collect():
-        counts[f"{g}_{d}"] = n
 
-    def sink(spec: SliceSpec) -> None:
-        part = frame.where((geoid == spec.geoid) & (dist == spec.distribution_type))
-        tag = f"{spec.geoid}_{spec.distribution_type}"
-        writers.write_csv_gzip(part, f"{out_root}/csv/{tag}")
-        writers.write_json_gzip(
-            shape_json_output(part, spec.distribution_type, clock=json_clock),
-            f"{out_root}/json/{tag}",
-        )
-
-    with ThreadPoolExecutor(max_workers=len(DEFAULT_SLICES)) as pool:
-        list(pool.map(sink, DEFAULT_SLICES))
-    return frame, counts
+def _move(src: str, dst: str) -> None:
+    shutil.rmtree(dst, ignore_errors=True)
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.rename(src, dst)
 
 
 def run_job(
@@ -569,18 +551,56 @@ def run_job(
     json_clock: str | None = None,
 ) -> dict[str, int]:
     """The nightly job end to end (script/main.py:300-416) over the
-    :data:`INPUT_TABLES` in ``tables``: the staged stage 0 of
-    :func:`prepare_job`, the one-pass slice frame with its per-slice
-    gzip CSV and JSON sinks (:func:`run_slices_concurrent`), then the
-    same cached frame overwritten into the month-partitioned parquet
-    sink under ``<out_root>/parquet``. ``json_clock`` pins the JSON
-    changelog timestamp. Returns the row count of each slice by its
-    tag. It unpersists the frame it cached, so it leaves no blocks
-    behind."""
+    :data:`INPUT_TABLES` in ``tables``: on :func:`prepare_job`'s stage 0,
+    the one-pass slice frame is written once, as the month-partitioned
+    parquet sink, into ``<out_root>/_run_staging``, counting each
+    slice's rows in flight; each slice's gzip CSV and JSON derive from
+    that write. Once every write has succeeded, renames publish them to
+    ``csv/<tag>``, ``json/<tag>`` and ``parquet/``, so a failed write
+    leaves all three sinks as they were. ``json_clock`` pins the JSON
+    changelog timestamp. Returns the row count of each slice by tag."""
     merged = prepare_job(tables, dates, out_root)
-    frame, counts = run_slices_concurrent(tables, merged, dates, out_root, json_clock=json_clock)
-    try:
-        writers.overwrite_partitions(frame, f"{out_root}/parquet", ["partitionMonth"])
-    finally:
-        frame.unpersist()
+    staging = f"{out_root}/_run_staging"
+    # the partitioned writes below replace only the partitions they
+    # write, so a slice left from an earlier run would survive them
+    shutil.rmtree(staging, ignore_errors=True)
+
+    frame = build_slices(merged, tables, DEFAULT_SLICES, dates)
+    tag = _slice_tag(F.col("classified_distributionType"))
+    observed = Observation()
+    per_slice = {spec.tag: F.count_if(tag == spec.tag) for spec in DEFAULT_SLICES}
+    # written from the frame itself: a read-back would lose
+    # partitionGeoid's not-null flag
+    observed_frame = with_observed_metrics(frame, observed, **per_slice)
+    writers.overwrite_partitions(observed_frame, f"{staging}/parquet", ["partitionMonth"])
+    counts = {spec.tag: observed.get[spec.tag] for spec in DEFAULT_SLICES}
+
+    # the staged table holds this run's month only, none if it has no rows
+    rows = frame.sparkSession.read.schema(frame.schema).parquet(f"{staging}/parquet")
+    writers.write_csv_gzip(rows.withColumn("slice", tag), f"{staging}/csv", ["slice"])
+    # both distributions write into one directory: the session's dynamic
+    # partition overwrite, which overwrite_partitions checked, keeps the
+    # slices the other one wrote
+    for dist in DISTRIBUTIONS:
+        shaped = shape_json_output(
+            rows.where(F.col("classified_distributionType") == dist), dist, clock=json_clock
+        )
+        writers.write_json_gzip(
+            shaped.withColumn("slice", _slice_tag(F.lit(dist))), f"{staging}/json", ["slice"]
+        )
+    empty = rows.where(F.lit(False))
+    for spec in DEFAULT_SLICES:
+        if not counts[spec.tag]:  # a header-only CSV and an empty JSON file
+            writers.write_csv_gzip(empty, f"{staging}/csv/slice={spec.tag}", [])
+            writers.write_json_gzip(empty, f"{staging}/json/slice={spec.tag}", [])
+
+    for spec in DEFAULT_SLICES:
+        for sink in ("csv", "json"):
+            _move(f"{staging}/{sink}/slice={spec.tag}", f"{out_root}/{sink}/{spec.tag}")
+            Path(out_root, sink, spec.tag, "_SUCCESS").touch()
+    month = f"partitionMonth={dates.partition_month}"
+    if any(counts.values()):
+        _move(f"{staging}/parquet/{month}", f"{out_root}/parquet/{month}")
+    else:  # as a dynamic overwrite with no rows: the sink's partitions stay
+        os.makedirs(f"{out_root}/parquet", exist_ok=True)
     return counts

@@ -10,31 +10,38 @@ Open-Spark replacements for the reference's three outputs
   atomically per partition — the Glue purge/append pair collapsed into
   one idempotent write)
 
-One output file, as the reference promises, but without its
-``coalesce(1)`` (``script/main.py:389``): that caps the *entire final
-stage* at one task, the #1 scalability hazard in the reference. The
-gzip writers shuffle to one partition with ``repartition(1)`` instead,
-so upstream stages keep full parallelism and only the write itself is
-narrow.
+One output file per directory, as the reference promises, but without
+its ``coalesce(1)`` (``script/main.py:389``): that caps the *entire
+final stage* at one task, the #1 scalability hazard in the reference.
+The gzip writers hash-partition on the directory's columns instead, so
+each directory's rows reach one task, upstream stages keep full
+parallelism and only the write itself is narrow.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 
 
-def write_json_gzip(df: DataFrame, path: str) -> None:
-    """K1: overwrite ``path`` with one gzip JSON-lines file."""
-    df.repartition(1).write.mode("overwrite").option("compression", "gzip").json(path)
+def _one_file_per_dir(df: DataFrame, partition_by: Sequence[str]) -> DataFrameWriter:
+    if partition_by:
+        return df.repartition(*partition_by).write.partitionBy(*partition_by)
+    return df.repartition(1).write
 
 
-def write_csv_gzip(df: DataFrame, path: str) -> None:
-    """K2: overwrite ``path`` with one gzip CSV file with a header row."""
+def write_json_gzip(df: DataFrame, path: str, partition_by: Sequence[str]) -> None:
+    """K1: overwrite ``path`` with gzip JSON lines, one file in each
+    ``partition_by`` directory, or in ``path`` itself when there is none."""
+    _one_file_per_dir(df, partition_by).mode("overwrite").option("compression", "gzip").json(path)
+
+
+def write_csv_gzip(df: DataFrame, path: str, partition_by: Sequence[str]) -> None:
+    """K2: as :func:`write_json_gzip`, as gzip CSV with a header row."""
     (
-        df.repartition(1)
-        .write.mode("overwrite")
+        _one_file_per_dir(df, partition_by)
+        .mode("overwrite")
         .option("compression", "gzip")
         .option("header", "true")
         .csv(path)

@@ -21,8 +21,8 @@ covers the whole job including the storage roundtrip.
 Scale notes: identical to the pipeline module's — ONE scan+shuffle for
 the stage-0 merge, staged once; the four slices are one plan, so each
 stage shuffles once for all of them; both geo dims broadcast. The gzip
-sinks write one file per slice, per the reference's contract, via
-``repartition(1)``, never ``coalesce(1)``.
+sinks write one file per slice, per the reference's contract, by
+hash-partitioning on the slice, never ``coalesce(1)``.
 """
 
 from __future__ import annotations
@@ -503,9 +503,9 @@ def _e2e_oracle() -> str:
     doc="The faithful consume-batch job END TO END under one value hash: "
     "derived reference-shaped inputs, then the CLI's run_job: stage-0 "
     "merge staged to a snappy-parquet table, stages 1-3 + modify_data "
-    "for all 4 slices in one cached pass (the enrichment inputs built "
-    "inside it), gzip CSV + gzip JSON sinks "
-    "per slice, dynamic-partition-overwrite parquet for all slices, "
+    "for all 4 slices in one uncached pass (the enrichment inputs built "
+    "inside it) written once as the parquet sink, per-slice gzip CSV + "
+    "JSON derived from it, all three sinks published together, "
     "result read back FROM THE PARQUET SINK. "
     "Oracle replays the derivation and every stage in DuckDB "
     "(reference script/main.py:300-416).",

@@ -5038,19 +5038,21 @@ def _factory_multimodal_oracle() -> str:
     """
 
 
-def _near_dup_later_side(pairs: DataFrame) -> DataFrame:
-    """The ARRIVAL-ORDER duplicate of each near-dup pair: pairs come
-    id-ordered (doc_a < doc_b); same-side pairs resolve to the larger
-    id, cross-side pairs to the batch doc even when its id is smaller.
-    Returns distinct (doc_id) — the docs a modality's dedup drops."""
-    a_b = F.col("doc_a") % 5 == 0
-    b_b = F.col("doc_b") % 5 == 0
-    return pairs.select(
-        F.when(a_b == b_b, F.col("doc_b"))
-        .when(a_b, F.col("doc_a"))
-        .otherwise(F.col("doc_b"))
-        .alias("doc_id")
-    ).distinct()
+def _near_dup_later_side(snap: DataFrame, new: DataFrame, sig: str) -> DataFrame:
+    """The docs the ``sig`` hamming <= 3 pairs that touch the batch
+    ``new`` (doc_id, __new) drop: each pair's ARRIVAL-ORDER later side.
+    Pairs come id-ordered (doc_a < doc_b), so that is doc_b when doc_b
+    is a batch doc (the larger id when both are), else the batch doc."""
+    sigs = snap.where(F.col(sig).isNotNull()).join(new, "doc_id", "left").fillna(False, ["__new"])
+    return (
+        hamming_verified_pairs(
+            sigs.select("doc_id", sig, "__new"), sig, band_hex_width=4, max_hamming=3,
+            batch=F.col("__new"),
+        )
+        .join(new.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left")
+        .select(F.when(F.col("__new"), F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_id"))
+        .distinct()
+    )
 
 
 def factory_multimodal_store_build(
@@ -5101,22 +5103,14 @@ def factory_multimodal_store_build(
     ).build(rows.withColumn("ingest_bucket", F.lit(0)))
 
     # historic multimodal survivors -> base token total (stored once;
-    # nights update it by addition — the BM25 stats-table precedent)
-    img_dups = _near_dup_later_side(
+    # nights update it by addition — the BM25 stats-table precedent).
+    # The history arrives as one batch: a pair's later side is doc_b.
+    img_dups, aud_dups = (
         hamming_verified_pairs(
-            rows.where(F.col("dhash").isNotNull()).select("doc_id", "dhash"),
-            "dhash",
-            band_hex_width=4,
-            max_hamming=3,
-        )
-    )
-    aud_dups = _near_dup_later_side(
-        hamming_verified_pairs(
-            rows.where(F.col("asig").isNotNull()).select("doc_id", "asig"),
-            "asig",
-            band_hex_width=4,
-            max_hamming=3,
-        )
+            rows.where(F.col(sig).isNotNull()).select("doc_id", sig), sig,
+            band_hex_width=4, max_hamming=3,
+        ).select(F.col("doc_b").alias("doc_id"))
+        for sig in ("dhash", "asig")
     )
     fp_min = (
         rows.groupBy("content_fp")
@@ -5198,24 +5192,8 @@ def factory_multimodal_nightly(
         .agg(F.min(F.struct("ingest_bucket", "doc_id")).alias("o"))
         .select("content_fp", F.col("o.doc_id").alias("owner"))
     )
-    img_dups = _near_dup_later_side(
-        hamming_verified_pairs(
-            snap.where(F.col("dhash").isNotNull()).select("doc_id", "dhash"),
-            "dhash",
-            band_hex_width=4,
-            max_hamming=3,
-            batch=F.col("doc_id") % 5 == 0,
-        )
-    )
-    aud_dups = _near_dup_later_side(
-        hamming_verified_pairs(
-            snap.where(F.col("asig").isNotNull()).select("doc_id", "asig"),
-            "asig",
-            band_hex_width=4,
-            max_hamming=3,
-            batch=F.col("doc_id") % 5 == 0,
-        )
-    )
+    new = prep_b.select("doc_id").withColumn("__new", F.lit(True))
+    img_dups, aud_dups = (_near_dup_later_side(snap, new, sig) for sig in ("dhash", "asig"))
     batch_q = (
         prep_b.where(F.col("n_words_main") >= _FACTORY_MIN_WORDS)
         # merge pin: prep_b is batch-sized behind a checkpoint whose

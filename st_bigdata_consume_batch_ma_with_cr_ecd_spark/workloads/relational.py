@@ -715,16 +715,15 @@ def skew_salted_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The salted-vs-unsalted BENCH PAIR: one hot key holds ~90% of lineitem
-# (l_orderkey % 10 < 9 -> key 0), the dim side carries 20 rows per key,
-# and each joined row pays a realistic per-record cost (md5 fingerprint
-# + hex->int, the engine's standard hashing primitive) — so the hot
-# key's fan-out lands ~10M md5 rows in ONE sort-merge task. Both
-# queries pin a sort-merge join (hint): salting exists precisely for
-# the broadcast-INELIGIBLE case, and at test scale any 4020-row dim
-# would auto-broadcast and hide the skew. Identical oracles prove the
-# salt changes only WHERE rows meet, never the result; the bench delta
-# (SCALE.md) shows what it buys (~2.5x wall at sf0.1/local[32]).
+# The hot-key join: one key holds ~90% of lineitem (l_orderkey % 10 < 9
+# -> key 0), the dim side carries 20 rows per key, and each joined row
+# pays a realistic per-record cost (md5 fingerprint + hex->int, the
+# engine's standard hashing primitive) — so without salting the hot
+# key's fan-out lands ~10M md5 rows in ONE sort-merge task. The join is
+# pinned to sort-merge (hint): salting exists precisely for the
+# broadcast-INELIGIBLE case, and at test scale any 4020-row dim would
+# auto-broadcast and hide the skew. The oracle is the plain join, so it
+# proves the salt changes only WHERE rows meet, never the result.
 # floor() before the bigint cast is deliberate: double->int CAST
 # truncates in Spark but ROUNDS in DuckDB. The outer CAST(sum AS BIGINT)
 # is load-bearing too: DuckDB integer sums return HUGEINT, which pandas
@@ -748,7 +747,19 @@ _SKEW_ORACLE = """
 """
 
 
-def _skew_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+@register(
+    "skew_join_salted_hot",
+    oracle=_SKEW_ORACLE,
+    doc="A hot-key join (key 0 holds ~90% of lineitem, x20 dim fan-out, md5 "
+    "per joined row) through operators.skew.salted_join (32 salt buckets): "
+    "the hot key's rows meet the replicated dim in 32 parallel tasks "
+    "instead of one sort-merge task. The oracle is the plain join — the "
+    "salt never changes the result, only the distribution.",
+    tags=("bench",),
+)
+def skew_join_salted_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.skew import salted_join
+
     k = F.col("l_orderkey")
     big = _t(spark, sf_dir, "lineitem").select(
         F.when(k % 10 < 9, F.lit(0)).otherwise(k % 200 + 1).alias("k"),
@@ -757,47 +768,12 @@ def _skew_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     small = spark.range(4020).select(
         (F.col("id") / 20).cast("bigint").alias("k"), (F.col("id") % 20).cast("bigint").alias("w")
     )
-    return big, small.hint("merge")
-
-
-def _skew_rollup(joined: DataFrame) -> DataFrame:
+    joined = salted_join(big, small.hint("merge"), ["k"], buckets=32)
     s = F.concat_ws(
         "-", F.col("k").cast("string"), F.col("c").cast("string"), F.col("w").cast("string")
     )
     fp = md5_prefix_int(s).cast("bigint")
-    return joined.groupBy("k").agg(
-        F.count(F.lit(1)).alias("n"), F.sum(fp).alias("fp_sum")
-    )
-
-
-@register(
-    "skew_join_unsalted_hot",
-    oracle=_SKEW_ORACLE,
-    doc="The skew ANTI-pattern baseline: hot key 0 (~90% of lineitem) x20 dim "
-    "fan-out, md5 per joined row, all through one sort-merge task. Exists to "
-    "be measured against its salted twin — identical output, pathological "
-    "distribution.",
-    tags=("bench",),
-)
-def skew_join_unsalted_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    big, small = _skew_pair(spark, sf_dir)
-    return _skew_rollup(big.join(small, "k"))
-
-
-@register(
-    "skew_join_salted_hot",
-    oracle=_SKEW_ORACLE,
-    doc="The same hot-key join through operators.skew.salted_join (32 salt "
-    "buckets): the hot key's rows meet the replicated dim in 32 parallel "
-    "tasks instead of one. Same oracle as the unsalted twin — the salt "
-    "never changes the result, only the distribution.",
-    tags=("bench",),
-)
-def skew_join_salted_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.skew import salted_join
-
-    big, small = _skew_pair(spark, sf_dir)
-    return _skew_rollup(salted_join(big, small, ["k"], buckets=32))
+    return joined.groupBy("k").agg(F.count(F.lit(1)).alias("n"), F.sum(fp).alias("fp_sum"))
 
 
 # --------------------------------------------------------------------------

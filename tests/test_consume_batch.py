@@ -601,6 +601,66 @@ def test_run_job_leaves_no_persistent_rdds(spark, fixture_tables, tmp_path):
     assert len(jsc.getPersistentRDDs()) == before
 
 
+def test_failed_write_publishes_nothing_and_empty_slices_publish_empty(
+    spark, fixture_tables, tmp_path, monkeypatch
+):
+    """A run publishes its three sinks only after every write has
+    succeeded: when its second derived write raises, every file name
+    and byte under ``csv/``, ``json/`` and ``parquet/`` is the previous
+    run's. A slice that is empty in the next run publishes a
+    header-only CSV and an empty JSON file, whatever an earlier run
+    left behind."""
+    import gzip
+
+    from st_bigdata_consume_batch_ma_with_cr_ecd_spark.sinks import writers
+
+    _, t = fixture_tables
+    out, clock = tmp_path / "out", "2024-01-30 00:00:00"
+
+    def sinks():
+        return {
+            str(f.relative_to(out)): f.read_bytes()
+            for sink in ("csv", "json", "parquet")
+            for f in (out / sink).rglob("*")
+            if f.is_file()
+        }
+
+    assert run_job(t, DATES, str(out), json_clock=clock)["103_BUY"] > 0
+    before = sinks()
+    calls = []
+
+    def fail_second(write):
+        def wrapped(*args):
+            calls.append(args[1])
+            if len(calls) == 2:
+                raise RuntimeError("injected write failure")
+            write(*args)
+
+        return wrapped
+
+    monkeypatch.setattr(writers, "write_csv_gzip", fail_second(writers.write_csv_gzip))
+    monkeypatch.setattr(writers, "write_json_gzip", fail_second(writers.write_json_gzip))
+    with pytest.raises(RuntimeError, match="injected"):
+        run_job(t, DATES, str(out), json_clock=clock)
+    monkeypatch.undo()
+    assert sinks() == before
+
+    geo = F.col("classified_geo_countrySpecific_de_iwtLegacyGeoID")
+    no_at_buy = {
+        **t,
+        "changelog": t["changelog"].where(
+            ~(geo.startswith("103") & (F.col("cleaned_classified_distributionType") == "BUY"))
+        ),
+    }
+    assert run_job(no_at_buy, DATES, str(out), json_clock=clock)["103_BUY"] == 0
+    (csv_gz,) = (out / "csv" / "103_BUY").glob("*.gz")
+    with gzip.open(csv_gz, "rt") as fh:
+        assert len(fh.read().splitlines()) == 1
+    (json_gz,) = (out / "json" / "103_BUY").glob("*.gz")
+    with gzip.open(json_gz) as fh:
+        assert fh.read() == b""
+
+
 @pytest.fixture(scope="module")
 def prepared_e2e(spark, sf_dir, tmp_path_factory):
     """``prepare_job`` run on the sf-derived e2e inputs."""

@@ -45,17 +45,27 @@ def test_read_csv_lookup_with_schema(spark, tmp_path):
 def test_write_csv_gzip_single_file(spark, tmp_path):
     df = spark.range(100).withColumn("v", F.col("id") * 2)
     out = str(tmp_path / "csv_out")
-    write_csv_gzip(df, out)
+    write_csv_gzip(df, out, [])
     parts = list(Path(out).glob("part-*.csv.gz"))
     assert len(parts) == 1
     back = spark.read.option("header", "true").csv(out)
     assert back.count() == 100
 
 
+def test_write_csv_gzip_one_file_per_partition(spark, tmp_path):
+    df = spark.range(100).withColumn("part", (F.col("id") % 3).cast("string"))
+    out = tmp_path / "csv_parts"
+    write_csv_gzip(df, str(out), ["part"])
+    for v in ("0", "1", "2"):
+        assert len(list((out / f"part={v}").glob("part-*.csv.gz"))) == 1
+    back = spark.read.option("header", "true").csv(str(out))
+    assert back.count() == 100 and "part" in back.columns
+
+
 def test_write_json_gzip_roundtrip_nested(spark, tmp_path):
     df = spark.createDataFrame([(1, ("x", 2))], "id int, s struct<a:string,b:int>")
     out = str(tmp_path / "json_out")
-    write_json_gzip(df, out)
+    write_json_gzip(df, out, [])
     assert list(Path(out).glob("part-*.json.gz"))
     back = spark.read.json(out)
     row = back.collect()[0]

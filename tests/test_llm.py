@@ -2084,6 +2084,7 @@ def test_multimodal_content_store_nightly_maintenance(spark, sf_dir):
     from st_bigdata_consume_batch_ma_with_cr_ecd_spark.workloads.llm import (
         factory_multimodal_nightly,
         factory_multimodal_store_build,
+        hamming_verified_pairs,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
@@ -2093,9 +2094,28 @@ def test_multimodal_content_store_nightly_maintenance(spark, sf_dir):
     content = IncrementalIndexStore(
         spark, f"{root}/content", keys=["doc_id"], partition_by=["ingest_bucket"]
     )
-    # two earlier "nights" accumulate versions before tonight's run
-    for night_slice in ("doc_id % 5 = 1",):
-        factory_multimodal_nightly(spark, docs.where(night_slice), root).collect()
+    # an earlier night accumulates a version before tonight's run; its
+    # near-dup verdicts come from the pairs that touch ITS docs: the
+    # unrestricted pairs of the post-merge snapshot, each resolved to
+    # its later arrival (the night's doc, or the larger id when both
+    # are the night's)
+    earlier = factory_multimodal_nightly(spark, docs.where("doc_id % 5 = 1"), root).collect()
+    snap = content.serve()
+    out_ids = {r.doc_id for r in earlier}
+
+    def later_side(sig):
+        pairs = hamming_verified_pairs(
+            snap.where(F.col(sig).isNotNull()).select("doc_id", sig),
+            sig,
+            band_hex_width=4,
+            max_hamming=3,
+        ).collect()
+        return {b if b % 5 == 1 else a for a, b, _ in pairs if 1 in (a % 5, b % 5)} & out_ids
+
+    want_img, want_aud = later_side("dhash"), later_side("asig")
+    assert want_img or want_aud, "no near-dup touches the earlier night — vacuous"
+    assert {r.doc_id for r in earlier if r.is_img_dup} == want_img
+    assert {r.doc_id for r in earlier if r.is_aud_dup} == want_aud
     want = sorted(
         map(
             tuple,

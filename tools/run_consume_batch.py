@@ -13,7 +13,9 @@ visibility, fraud, contacts, visits, bundeslaender, stadtlandkreise``
 (schemas: see pipelines.consume_batch docstrings / tests). ``--days-ago
 full_refresh`` rewinds to the data epoch like the reference's flag.
 The output dir gets ``csv/<slice>``, ``json/<slice>`` and ``parquet/``,
-plus the job's stage-0 staging table ``_stage0_staging/merged``.
+plus the job's stage-0 staging table ``_stage0_staging/merged`` and
+``_run_staging/``, where each run writes all three sinks before it
+publishes them by rename.
 """
 
 from __future__ import annotations
